@@ -6,17 +6,21 @@ import graft.corpus.Gen
 import graft.spark.Pipeline
 
 /** The N-vs-4N scaling evidence (BASELINE.json north_rule): run the
-  * identical extraction job at local[4] and local[16] on byte-identical
-  * input and report throughput at both plus scaling efficiency
-  * (tput_4N / tput_N) / 4, gated at >= 0.8.
+  * identical extraction job at local[N] and local[4N] (SCALING_N, default
+  * 2: local[2] against local[8]) on byte-identical input and report
+  * throughput at both plus scaling efficiency (tput_4N / tput_N) / 4,
+  * gated at >= 0.8.
   *
   * Sandbox notes (no multi-node cluster exists here; see BASELINE.md):
-  *  - N=4 -> 4N=16 keeps both points inside this box's physically
-  *    effective cores. Measured pure-CPU ceiling of the host: 8->32
-  *    threads yields only ~2.4x (clock/SMT effects), i.e. local[32]
-  *    cannot evidence 4x for ANY CPU-bound job, while 4->16 is clean.
-  *  - corpus is 4x the bench corpus so compute dominates fixed overhead;
-  *  - best-of-3 measured passes after a warm-up (JIT + page cache);
+  *  - 4N must stay inside the host's physically effective cores. Measured
+  *    pure-CPU ceiling of the host: 8->32 threads yields only ~2.4x
+  *    (clock/SMT effects), i.e. local[32] cannot evidence 4x for ANY
+  *    CPU-bound job;
+  *  - corpus is SCALING_MULT (default 16) x the bench corpus so compute
+  *    dominates fixed overhead;
+  *  - each of SCALING_ROUNDS (default 5) rounds times N and 4N back to
+  *    back, after one warm-up pass per side in round 1 (JIT + page
+  *    cache); the headline is the median per-round efficiency;
   *  - memoryMapThreshold is raised: mmap/unmap of shuffle blocks at high
   *    thread counts triggers TLB-shootdown storms (observed via jstack).
   */

@@ -2,6 +2,7 @@ package graft.corpus
 
 import java.io.ByteArrayOutputStream
 import java.nio.charset.StandardCharsets
+import java.time.LocalDateTime
 import java.util.SplittableRandom
 import java.util.zip.{GZIPOutputStream, ZipEntry, ZipOutputStream}
 
@@ -154,8 +155,9 @@ object ArchiveWriter {
       // fixed mod-time => byte-deterministic archives (the un-set entry
       // time is wall-clock: it made ~0.5% of media payloads differ
       // between corpus regenerations, breaking the Gen.build purity
-      // contract and regen-stability of byte-checksum queries)
-      e.setTime(1595526399000L)
+      // contract and regen-stability of byte-checksum queries). Set as
+      // local time: setTime(epochMs) converts through the default zone.
+      e.setTimeLocal(LocalDateTime.of(2020, 7, 23, 17, 46, 39))
       zos.putNextEntry(e)
       zos.write(bytes)
       zos.closeEntry()

@@ -2,6 +2,7 @@ package graft.corpus
 
 import java.io.ByteArrayOutputStream
 import java.nio.charset.StandardCharsets
+import java.time.LocalDateTime
 import java.util.zip.{CRC32, ZipEntry, ZipOutputStream}
 
 /** Deterministic OOXML (docx) writer for the synthetic corpus: a real zip
@@ -141,11 +142,12 @@ object DocxWriter {
     val out = new ByteArrayOutputStream()
     val zip = new ZipOutputStream(out)
     // STORED first entry (magic-sniff window must see the names early);
-    // fixed time keeps bytes deterministic across runs/JVMs.
+    // fixed local time keeps bytes deterministic across runs, JVMs and
+    // default time zones.
     def add(name: String, data: String, stored: Boolean = false): Unit = {
       val bytes = data.getBytes(StandardCharsets.UTF_8)
       val e = new ZipEntry(name)
-      e.setTime(1595526399000L)
+      e.setTimeLocal(LocalDateTime.of(2020, 7, 23, 17, 46, 39))
       if (stored) {
         e.setMethod(ZipEntry.STORED)
         e.setSize(bytes.length)

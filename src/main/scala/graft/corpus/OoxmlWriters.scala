@@ -2,6 +2,7 @@ package graft.corpus
 
 import java.io.ByteArrayOutputStream
 import java.nio.charset.StandardCharsets
+import java.time.LocalDateTime
 import java.util.zip.{CRC32, ZipEntry, ZipOutputStream}
 
 /** Shared deterministic zip assembly for the OOXML corpus writers. */
@@ -12,7 +13,8 @@ private[corpus] object OoxmlZip {
     entries.zipWithIndex.foreach { case ((name, data), idx) =>
       val bytes = data.getBytes(StandardCharsets.UTF_8)
       val e = new ZipEntry(name)
-      e.setTime(1595526399000L) // fixed time => byte-deterministic
+      // fixed zone-free time => byte-deterministic
+      e.setTimeLocal(LocalDateTime.of(2020, 7, 23, 17, 46, 39))
       if (idx == 0) {
         // STORED first entry so the magic-sniff front window sees names
         e.setMethod(ZipEntry.STORED)

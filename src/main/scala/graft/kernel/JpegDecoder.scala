@@ -23,7 +23,7 @@ package graft.kernel
   */
 object JpegDecoder {
 
-  private final class Huff(counts: Array[Int], symbols: Array[Int]) {
+  private[graft] final class Huff(counts: Array[Int], symbols: Array[Int]) {
     // canonical code tables per the spec's Decode procedure
     val minCode = new Array[Int](17)
     val maxCode = new Array[Int](17)
@@ -50,6 +50,8 @@ object JpegDecoder {
       * <= 8; 0 = no such code (fall back to the exact bit-by-bit walk).
       * Pure lookup acceleration of the same canonical decode — the
       * decoded (symbol, consumed-bits) pair is identical by construction.
+      * An oversubscribed DHT assigns length-l codes >= 2^l; no l-bit read
+      * can produce one (the walk never returns it), so they are skipped.
       */
     val lut = new Array[Int](256)
     locally {
@@ -57,7 +59,7 @@ object JpegDecoder {
       while (l <= 8) {
         if (maxCode(l) >= 0) {
           var code = minCode(l)
-          while (code <= maxCode(l)) {
+          while (code <= maxCode(l) && code < (1 << l)) {
             val sym = symbol(valPtr(l) + code - minCode(l))
             if (sym >= 0) {
               val base = code << (8 - l)
@@ -77,11 +79,14 @@ object JpegDecoder {
     * bulk-loads runs of PLAIN (non-0xFF) bytes; 0xFF bytes (stuffing or a
     * real marker) are always handled one at a time by the exact slow path,
     * so marker detection, stuffing and end-of-data behave bit-for-bit like
-    * the original per-byte reader — and because the accumulator never
-    * holds a stuffed byte, the logical byte position is recoverable as
+    * the original per-byte reader. The slow path pushes a stuffed
+    * 0xFF 0x00 pair only when fewer bits are buffered than the current
+    * read needs, so that read leaves under 8 of its bits behind: the
+    * stuffed byte is partly consumed, every WHOLE buffered byte is a
+    * plain input byte, and the logical byte position is recoverable as
     * pos - nAcc/8 (used by restart()). `pos` may run ahead of the
-    * consumed bits by buffered PLAIN bytes only, so forward marker scans
-    * from `pos` find the same next marker.
+    * consumed bits by those buffered plain bytes only, so forward marker
+    * scans from `pos` find the same next marker.
     */
   private final class BitReader(bytes: Array[Byte], var pos: Int) {
     var acc = 0L

@@ -38,7 +38,6 @@ object Par {
     * (real partitions are far above 1m, and target sizes still come
     * from advisoryPartitionSize). 64k was measured too aggressive:
     * ~0.05 s of task-launch overhead per stage on 0.1-0.3 s queries.
-    * Override via SPARK_GRAFT_MIN_COALESCE.
     */
   @volatile private var tunedApp: String = ""
 
@@ -46,8 +45,7 @@ object Par {
     val app = spark.sparkContext.applicationId
     if (tunedApp != app) synchronized {
       if (tunedApp != app) {
-        spark.conf.set("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-          sys.env.getOrElse("SPARK_GRAFT_MIN_COALESCE", "256k"))
+        spark.conf.set("spark.sql.adaptive.coalescePartitions.minPartitionSize", "256k")
         tunedApp = app
       }
     }

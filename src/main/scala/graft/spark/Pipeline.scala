@@ -33,7 +33,6 @@ object Pipeline {
   final case class Config(
       maxContentLength: Int = -1,
       saltPartitions: Int = 0, // 0 = spark.sql.shuffle.partitions
-      broadcastMedia: Boolean = false,
       /** Extract only media rows actually referenced by a doc span: a
         * keys-only semi-join gates the media scan, so a RESUME run (99%
         * of docs committed, anti-joined away upstream) runs kernels only
@@ -129,14 +128,13 @@ object Pipeline {
     // nothing from the span row. Unreferenced media (the resume case) is
     // gated out by a broadcast semi-join on keys BEFORE payloads are
     // decoded — see Config.gateMediaByReference.
-    val mediaSpans = spanRows(withText = false).filter(col("media_ref").isNotNull)
-    // the shuffle-join path repartitions mediaSpans on media_ref; deriving
-    // the gate's key set from the SAME repartitioned subtree makes the
-    // two identical exchanges reuse one docs scan+explode (plan-audited:
-    // the separate keys subtree re-scanned docs once per pass)
-    val mediaSpansParted =
-      if (cfg.broadcastMedia) mediaSpans
-      else mediaSpans.repartition(p, col("media_ref"))
+    // the span join repartitions media spans on media_ref; deriving the
+    // gate's key set from the SAME repartitioned subtree makes the two
+    // identical exchanges reuse one docs scan+explode (plan-audited: the
+    // separate keys subtree re-scanned docs once per pass)
+    val mediaSpansParted = spanRows(withText = false)
+      .filter(col("media_ref").isNotNull)
+      .repartition(p, col("media_ref"))
     // The gate's key set is broadcast ONLY while its size estimate is
     // under gateBroadcastMaxKeys. Above the cap (a full run over a
     // ~1e9-media corpus) the gate is dropped entirely rather than
@@ -172,16 +170,12 @@ object Pipeline {
 
     // left join keeps spans whose media_ref resolves nothing -> io_error
     // taxonomy rows (null-filled columns defaulted below). Both sides are
-    // text-sized; broadcastMedia broadcasts the extracted side, otherwise
-    // an explicit hash exchange on media_ref (uniform by construction).
-    val exDF = extractedMedia.toDF()
-    val mediaJoined =
-      if (cfg.broadcastMedia)
-        mediaSpans.join(broadcast(exDF), Seq("media_ref"), "left")
-      else
-        mediaSpansParted
-          .hint("shuffle_hash")
-          .join(exDF.repartition(p, col("media_ref")), Seq("media_ref"), "left")
+    // text-sized and meet in an explicit hash exchange on media_ref
+    // (uniform by construction).
+    val mediaJoined = mediaSpansParted
+      .hint("shuffle_hash")
+      .join(extractedMedia.toDF().repartition(p, col("media_ref")),
+        Seq("media_ref"), "left")
 
     val emptyMeta = array().cast("array<struct<key:string,value:string>>")
     val mediaRows: Dataset[SpanExtract] = mediaJoined.select(

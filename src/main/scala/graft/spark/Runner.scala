@@ -24,8 +24,7 @@ object Runner {
   def metricsDir(outDir: String) = s"$outDir/metrics"
 
   def run(spark: SparkSession, docs: DataFrame, media: DataFrame,
-      outDir: String, runId: String,
-      cfg: Pipeline.Config = Pipeline.Config()): RunStats = {
+      outDir: String, runId: String): RunStats = {
     val t0 = System.nanoTime()
 
     // resume: anti-join against already-committed doc_ids
@@ -36,9 +35,8 @@ object Runner {
     // resume runs gate the media scan by the todo set's referenced keys
     // (the gate's purpose); fresh runs skip the gate's extra docs scan —
     // output rows are identical either way (see Config.gateMediaByReference)
-    val runCfg =
-      if (done.isDefined) cfg.copy(gateMediaByReference = true) else cfg
-    val extracted = Pipeline.extract(spark, todo, media, runCfg)
+    val cfg = Pipeline.Config(gateMediaByReference = done.isDefined)
+    val extracted = Pipeline.extract(spark, todo, media, cfg)
       .toDF()
       .withColumn("part_id", spark_partition_id())
       .withColumn("run_id", lit(runId))

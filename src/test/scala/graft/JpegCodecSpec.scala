@@ -224,4 +224,32 @@ class JpegCodecSpec extends AnyFunSuite {
       assert(java.util.Arrays.equals(a, b), s"trial $trial: ${coef.toSeq}")
     }
   }
+
+  test("Huffman LUT equals the exact bit walk on every 8-bit prefix, oversubscribed too") {
+    val tables = Seq(
+      // Annex K luminance DC: a complete table
+      Array(0, 1, 5, 1, 1, 1, 1, 1, 1, 0, 0, 0, 0, 0, 0, 0),
+      // incomplete: some prefixes start no code at all
+      Array(0, 1, 1, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0),
+      // oversubscribed: three 1-bit codes (code 2 does not fit in 1 bit)
+      Array(3, 1, 0, 0, 0, 0, 0, 0, 2, 0, 0, 0, 0, 0, 0, 0),
+      // oversubscribed at length 3: codes 4..8, and 8 does not fit
+      Array(0, 2, 5, 0, 1, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0))
+    for (counts <- tables) {
+      val h = new JpegDecoder.Huff(counts, Array.tabulate(counts.sum)(i => 10 + i))
+      for (p <- 0 until 256) {
+        // decodeHuff's slow path over the first 8 bits of p
+        var code = 0
+        var l = 1
+        var want = 0
+        while (want == 0 && l <= 8) {
+          code = (code << 1) | ((p >>> (8 - l)) & 1)
+          if (h.maxCode(l) >= 0 && code <= h.maxCode(l))
+            want = (l << 8) | h.symbol(h.valPtr(l) + code - h.minCode(l))
+          l += 1
+        }
+        assert(h.lut(p) == want, s"counts=${counts.toSeq} prefix=$p")
+      }
+    }
+  }
 }

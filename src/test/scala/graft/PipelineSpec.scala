@@ -172,7 +172,7 @@ class PipelineSpec extends AnyFunSuite {
     assert(diff == 0)
   }
 
-  test("missing media_ref -> io_error row (both join strategies)") {
+  test("missing media_ref -> io_error row (default and salted config)") {
     import spark.implicits._
     val docs = Seq(
       graft.spark.DocRow("doc-x", Seq(graft.spark.Span("pdf", null, "m-nope", 0))),

@@ -45,6 +45,17 @@ class WritersSpec extends AnyFunSuite {
     }
   }
 
+  test("DocxWriter bytes do not depend on the default time zone") {
+    val spec = DocxWriter.Spec("Title", "Creator Y", Vector("one paragraph"), pages = 1)
+    val saved = java.util.TimeZone.getDefault
+    try {
+      java.util.TimeZone.setDefault(java.util.TimeZone.getTimeZone("UTC"))
+      val utc = DocxWriter.write(spec)
+      java.util.TimeZone.setDefault(java.util.TimeZone.getTimeZone("Asia/Kolkata"))
+      assert(java.util.Arrays.equals(DocxWriter.write(spec), utc))
+    } finally java.util.TimeZone.setDefault(saved)
+  }
+
   test("CfbWriter -> DocKernel round-trip") {
     for (seed <- 0 until 20) {
       val rng = new SplittableRandom(seed)
