@@ -59,7 +59,7 @@ object SparkEntry {
   /** documents with synthetic duplicates planted (doc_id < 50 duplicated
     * with shifted ids) so dedup operators have real work.
     */
-  private def docsWithDups(spark: SparkSession, dir: String): DataFrame = {
+  private[graft] def docsWithDups(spark: SparkSession, dir: String): DataFrame = {
     val d = t(spark, dir, "documents")
     d.select(col("doc_id"), col("text"))
       .unionAll(d.filter(col("doc_id") < 50)
@@ -70,7 +70,7 @@ object SparkEntry {
     * duplicated with shifted ids) so bucketed embedding-dedup/ANN have
     * true near neighbors to find (the natural table is ~isotropic noise).
     */
-  private def embWithDups(spark: SparkSession, dir: String): DataFrame = {
+  private[graft] def embWithDups(spark: SparkSession, dir: String): DataFrame = {
     val e = t(spark, dir, "embeddings")
     e.select(col("vec_id"), col("embedding"))
       .unionAll(e.filter(col("vec_id") < 30)

@@ -84,8 +84,6 @@ object Ann {
   def bruteTopK(emb: DataFrame, queries: DataFrame, k: Int = 10,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     import graft.functions.dot_f64
-    // no Par.spread: k dots per row cannot amortize an extra exchange
-    // (measured +0.1 s on the r7 bench when spread)
     val base = emb.select(col(idCol).as("id"), col(vecCol).as("v"))
       .withColumn("norm", sqrt(dot_f64(col("v"), col("v"))))
     val q = queries.select(col(idCol).as("qid"), col(vecCol).as("qv"))
@@ -173,8 +171,7 @@ object Ann {
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     import graft.functions.dot_f64
     val dims = dimsOf(emb, vecCol)
-    val spreadEmb = Par.spread(emb, idCol)
-    val index = lshSignatures(spreadEmb, nTables, nBits, seed, idCol, vecCol, dims)
+    val index = lshSignatures(emb, nTables, nBits, seed, idCol, vecCol, dims)
     val qsig = lshSignatures(queries, nTables, nBits, seed, idCol, vecCol, dims)
       .withColumnRenamed("id", "qid")
     // probe set per (qid, tbl): the signature itself plus its 1-bit flips
@@ -187,7 +184,7 @@ object Ann {
         index("tbl") === probes("tbl") && index("sig") === probes("p") &&
         index("id") =!= probes("qid"))
       .select(col("qid"), col("id")).distinct()
-    val base = spreadEmb.select(col(idCol).as("id"), col(vecCol).as("v"))
+    val base = emb.select(col(idCol).as("id"), col(vecCol).as("v"))
       .withColumn("norm", sqrt(dot_f64(col("v"), col("v"))))
     val q = queries.select(col(idCol).as("qid"), col(vecCol).as("qv"))
       .withColumn("qnorm", sqrt(dot_f64(col("qv"), col("qv"))))

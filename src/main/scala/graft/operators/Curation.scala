@@ -85,33 +85,10 @@ object Curation {
     */
   private def propagate(pairs: DataFrame, maxRounds: Int,
       toFixpoint: Boolean): DataFrame = {
-    // Scale-adaptive edge compaction (guide §2.2: derive partitioning from
-    // input size, not upstream accident). `edges` is two narrow projections
-    // of `pairs` unioned: its partition count is 2x the upstream's whatever
-    // the data volume, and union is a narrow op, so AQE's post-shuffle
-    // coalescing never sees it — yet EVERY propagation round launches a map
-    // stage over every edge partition (the localCheckpoint pins them). At
-    // bench scale that was ~30 stages of 64 near-empty tasks per query
-    // (r7 stage audit: dedup_clusters 1.8 s of pure task scheduling over a
-    // few KB of pairs). Coalesce (no shuffle, order-preserving) to a
-    // partition count derived from the plan-time size estimate vs the
-    // session's advisory partition size ONLY when the estimate says the
-    // table underfills the cluster; a large pairs table is left untouched.
-    // Results are partitioning-independent (min-label aggregation + left
-    // join; final output re-sorted by doc_id).
-    val conf = pairs.sparkSession.sessionState.conf
-    val estEdges = pairs.queryExecution.optimizedPlan.stats.sizeInBytes * 2
-    val advisory = math.max(1L, conf.getConf(
-      org.apache.spark.sql.internal.SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES))
-    val cores = conf.numShufflePartitions
-    val edgesRaw = pairs
+    val edges = pairs
       .select(col("doc_a").as("src"), col("doc_b").as("dst"))
       .unionAll(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-    val edgesSized =
-      if (estEdges < BigInt(advisory) * cores)
-        edgesRaw.coalesce(math.max(1, ((estEdges + advisory - 1) / advisory).toInt))
-      else edgesRaw
-    val edges = edgesSized.localCheckpoint()
+      .localCheckpoint()
     var labels = edges.select(col("src").as("id")).distinct()
       .withColumn("lbl", col("id"))
       .localCheckpoint()

@@ -48,8 +48,6 @@ object Dedup {
   /** Exact dedup: group identical texts by content hash.
     * Output: (text_hash, n_docs, representative = min doc_id, doc_ids).
     */
-  // no Par.spread: one md5 per doc is too cheap to amortize an extra
-  // exchange (measured +0.2 s on the r7 bench when spread)
   def exact(docs: DataFrame, idCol: String = "doc_id", textCol: String = "text"): DataFrame =
     docs.groupBy(md5(col(textCol)).as("text_hash"))
       .agg(count(lit(1)).as("n_docs"),
@@ -59,7 +57,7 @@ object Dedup {
 
   /** Per-doc MinHash signature (NumHashes values). */
   def minhashSignature(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val sh = Par.spread(docs, idCol).select(col(idCol).as("doc_id"),
+    val sh = docs.select(col(idCol).as("doc_id"),
       explode(shingles(col(textCol))).as("sh"))
       .withColumn("h", pmod(h64(col("sh")), lit(P)))
     val aggs = (0 until NumHashes).map { i =>
@@ -95,7 +93,7 @@ object Dedup {
     // exact verification on shingle sets; `cand` is consumed exactly once
     // (a zero-intersection candidate cannot reach any threshold > 0, so no
     // left join back onto cand is needed)
-    val shs = Par.spread(docs, idCol).select(col(idCol).as("doc_id"),
+    val shs = docs.select(col(idCol).as("doc_id"),
       explode(graft.functions.shingles_distinct(col(textCol), 3)).as("sh"))
     val counts = shs.groupBy("doc_id").agg(count(lit(1)).as("n"))
     val inter = cand
@@ -138,7 +136,7 @@ object Dedup {
 
   /** Per-doc SimHash signatures, unsorted (building block). */
   def simhashSigs(docs: DataFrame, idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val tok = Par.spread(docs, idCol).select(col(idCol).as("doc_id"),
+    val tok = docs.select(col(idCol).as("doc_id"),
       explode(tokens(col(textCol))).as("t"))
       .filter(col("t") =!= "")
       .withColumn("h", h64(col("t"))) // 60-bit value: bits 0..59 meaningful
@@ -208,7 +206,7 @@ object Dedup {
     */
   def ngramJaccard(docs: DataFrame, threshold: Double = 0.5, dfCap: Int = 1024,
       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val all = Par.spread(docs, idCol).select(col(idCol).as("doc_id"),
+    val all = docs.select(col(idCol).as("doc_id"),
       explode(graft.functions.shingles_distinct(col(textCol), 3)).as("sh"))
     // df filter first: the rare-shingle table and the self-join below share
     // the `sh` hash-partitioning, so the exchange is reused
@@ -268,8 +266,7 @@ object Dedup {
       nTables: Int = 8, nBits: Int = 16, seed: Long = 42L,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     import graft.functions.dot_f64
-    val spreadEmb = Par.spread(emb, idCol)
-    val sigs = Ann.lshSignatures(spreadEmb, nTables, nBits, seed, idCol, vecCol)
+    val sigs = Ann.lshSignatures(emb, nTables, nBits, seed, idCol, vecCol)
     // both sides shuffle identically on (tbl, sig) => ReuseExchange;
     // shuffle_hash pins that shape (broadcast would recompute the
     // 128-hyperplane signature projection per side)
@@ -278,7 +275,7 @@ object Dedup {
         col("x.id") < col("y.id"))
       .select(col("x.id").as("id_a"), col("y.id").as("id_b"))
       .distinct()
-    val base = spreadEmb.select(col(idCol).as("id"), col(vecCol).as("v"))
+    val base = emb.select(col(idCol).as("id"), col(vecCol).as("v"))
       .withColumn("norm", sqrt(dot_f64(col("v"), col("v"))))
     cand
       .join(base.as("a"), col("id_a") === col("a.id"))

@@ -47,6 +47,22 @@ object Multimodal {
     case _               => None
   }
 
+  /** Header/EXIF metadata of an image (or MP4/HEIF) payload; empty for
+    * kinds without a metadata kernel.
+    */
+  def imageMeta(bytes: Array[Byte], kind: Magic.Kind): Map[String, String] = kind match {
+    case Magic.Kind.Jpeg => JpegKernel.extract(bytes)
+    case Magic.Kind.Png  => graft.kernel.PngKernel.extract(bytes)
+    case Magic.Kind.Gif  => graft.kernel.GifKernel.extract(bytes)
+    case Magic.Kind.Bmp  => graft.kernel.BmpKernel.extract(bytes)
+    case Magic.Kind.Webp => graft.kernel.WebpKernel.extract(bytes)
+    case Magic.Kind.Tiff => graft.kernel.TiffKernel.extract(bytes)
+    case Magic.Kind.Mp4  => graft.kernel.Mp4Kernel.extract(bytes)
+    case Magic.Kind.Heic | Magic.Kind.Heif | Magic.Kind.Avif =>
+      graft.kernel.HeifKernel.extract(bytes)
+    case _               => Map.empty
+  }
+
   /** dim-bin normalized luma histogram — the real feature vector. */
   def lumaHistogram(img: RawImage, dim: Int): Array[Float] = {
     val hist = new Array[Int](dim)
@@ -93,18 +109,7 @@ object Multimodal {
             if (b64 == null || b64.isEmpty) Array.emptyByteArray
             else java.util.Base64.getDecoder.decode(b64)
           val kind = Magic.sniff(bytes)
-          val meta: Map[String, String] = kind match {
-            case Magic.Kind.Jpeg => JpegKernel.extract(bytes)
-            case Magic.Kind.Png  => graft.kernel.PngKernel.extract(bytes)
-            case Magic.Kind.Gif  => graft.kernel.GifKernel.extract(bytes)
-            case Magic.Kind.Bmp  => graft.kernel.BmpKernel.extract(bytes)
-            case Magic.Kind.Webp => graft.kernel.WebpKernel.extract(bytes)
-            case Magic.Kind.Tiff => graft.kernel.TiffKernel.extract(bytes)
-            case Magic.Kind.Mp4  => graft.kernel.Mp4Kernel.extract(bytes)
-            case Magic.Kind.Heic | Magic.Kind.Heif | Magic.Kind.Avif =>
-              graft.kernel.HeifKernel.extract(bytes)
-            case _               => Map.empty
-          }
+          val meta = imageMeta(bytes, kind)
           val pixels = decodePixels(bytes, kind)
           val (ah, ph) = pixels match {
             case Some(img) => (ImageOps.aHash64(img), ImageOps.pHash64(img))

@@ -71,7 +71,7 @@ object TextOps {
     // native codegen 4-gram shingles (see Dedup.shingles: the HOF form
     // re-split the text once per output shingle, O(tokens x shingles))
     val sh = graft.functions.shingles(col(textCol), 4)
-    Par.spread(docs, idCol).select(col(idCol).as("doc_id"), explode(sh).as("s"))
+    docs.select(col(idCol).as("doc_id"), explode(sh).as("s"))
       .withColumn("h", Dedup.h64(col("s")))
       .groupBy("doc_id")
       .agg(min(col("h")).as("fp_min"), max(col("h")).as("fp_max"),

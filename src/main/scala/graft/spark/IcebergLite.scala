@@ -2,7 +2,8 @@ package graft.spark
 
 import java.io.File
 import java.nio.file.{Files, Paths, StandardCopyOption}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.functions.{count, lit}
 
 /** Iceberg-style table emulation over Parquet (SURVEY.md §7.0: no Iceberg
   * runtime jar ships in this environment, so the pieces the north rule
@@ -41,8 +42,12 @@ object IcebergLite {
     val parent = currentSnapshot(tableDir)
     val id = parent + 1
     val dataDir = s"$tableDir/data/snap-$id"
-    df.write.mode("overwrite").parquet(dataDir)
-    val rows = 0L // row count is informational; avoid an extra job here
+    // the row count rides the write job itself (an observed metric), so
+    // the manifest is exact without a second pass over the data
+    val written = Observation()
+    df.observe(written, count(lit(1)).as("rows"))
+      .write.mode("overwrite").parquet(dataDir)
+    val rows = written.get("rows").asInstanceOf[Long]
     Files.createDirectories(Paths.get(s"$tableDir/snapshots"))
     val manifest =
       s"""{"id":$id,"parent":$parent,"dir":"data/snap-$id","rows":$rows}"""

@@ -178,6 +178,78 @@ class FuzzSpec extends AnyFunSuite {
     }
   }
 
+  /** Writer-generated images, one or more per pixel decoder behind
+    * [[graft.operators.Multimodal.decodePixels]].
+    */
+  def images: Seq[(String, Array[Byte])] = {
+    import graft.corpus.{BmpWriterEx, GifWriter, JpegWriterEx, PngWriterEx,
+      TiffWriterEx, Vp8WriterEx, WebpWriterEx}
+    Seq(
+      "baseline.jpg" -> JpegWriterEx.write(JpegWriterEx.Spec(40, 30, 3L,
+        subsample = true, restartInterval = 2)),
+      "progressive.jpg" -> JpegWriterEx.write(JpegWriterEx.Spec(40, 30, 4L,
+        progressive = true)),
+      "rgb.png" -> PngWriterEx.write(PngWriterEx.Spec(24, 18, 5L,
+        colorType = 2, cycleFilters = true)),
+      "adam7.png" -> PngWriterEx.write(PngWriterEx.Spec(24, 18, 6L,
+        colorType = 3, interlaced = true)),
+      "interlaced.gif" -> GifWriter.write(GifWriter.Spec(24, 18, 7L, interlaced = true)),
+      "anim.gif" -> GifWriter.writeAnim(GifWriter.AnimSpec(24, 18, 8L, 3,
+        transparency = true)),
+      "rgb.bmp" -> BmpWriterEx.write(BmpWriterEx.Spec(24, 18, 9L)),
+      "lzw.tif" -> TiffWriterEx.write(TiffWriterEx.Spec(24, 18, 10L,
+        rgb = true, rowsPerStrip = 5, compression = 5)),
+      "packbits.tif" -> TiffWriterEx.write(TiffWriterEx.Spec(24, 18, 11L,
+        bigEndian = true, rowsPerStrip = 7, compression = 32773)),
+      "vp8l.webp" -> WebpWriterEx.write(WebpWriterEx.Spec(33, 27, 12L,
+        subtractGreen = true, predictor = true, predSizeBits = 2,
+        colorXform = true, metaGroups = 3, metaGroupBits = 2)),
+      "vp8l-pal.webp" -> WebpWriterEx.write(WebpWriterEx.Spec(29, 21, 13L,
+        useLz77 = false, paletteSize = 13)),
+      "vp8.webp" -> Vp8WriterEx.write(Vp8WriterEx.Spec(48, 36, 14L,
+        nParts = 2, skipFlags = true, filterLevel = 20)))
+  }
+
+  test("pixel-decoder fuzz: mutated images never throw from the analysis calls") {
+    import graft.kernel.Magic
+    import graft.operators.Multimodal
+    // the two calls Multimodal.imageAnalysis makes outside any catch
+    def failure(b: Array[Byte]): Option[String] =
+      try {
+        val kind = Magic.sniff(b)
+        Multimodal.imageMeta(b, kind)
+        Multimodal.decodePixels(b, kind)
+        None
+      } catch { case t: Throwable => Some(t.toString) }
+    val pool = images
+    val rng = new java.util.SplittableRandom(17)
+    val failures = Seq.newBuilder[String]
+    for ((name, orig) <- pool) {
+      assert(failure(orig).isEmpty, s"$name: unmutated bytes must decode")
+      for (trial <- 0 until 150) {
+        val b = orig.clone()
+        for (_ <- 0 until 1 + rng.nextInt(8)) {
+          val i = rng.nextInt(b.length)
+          b(i) = (b(i) ^ (1 << rng.nextInt(8))).toByte
+        }
+        failure(b).foreach(e => failures += s"$name flip $trial: $e")
+      }
+      for (trial <- 0 until 50) {
+        val n = 1 + rng.nextInt(orig.length)
+        failure(java.util.Arrays.copyOf(orig, n))
+          .foreach(e => failures += s"$name cut at $n: $e")
+      }
+      for (trial <- 0 until 30) {
+        val (other, tail) = pool(rng.nextInt(pool.size))
+        val cut = 1 + rng.nextInt(math.min(orig.length, tail.length) - 1)
+        failure(java.util.Arrays.copyOf(orig, cut) ++ tail.drop(cut))
+          .foreach(e => failures += s"$name + $other at $cut: $e")
+      }
+    }
+    val all = failures.result()
+    assert(all.isEmpty, s"${all.size} throws:\n" + all.take(20).mkString("\n"))
+  }
+
   test("crafted PDF ref cycles resolve without StackOverflowError") {
     // mutation fuzz can't surface structural cycles — craft them directly.
     // A StackOverflowError is NOT NonFatal, so an unguarded deref would

@@ -139,6 +139,31 @@ class OperatorsSpec extends AnyFunSuite {
     assert(sigs.forall(r => !r.isNullAt(2)))
   }
 
+  test("operators give the same rows on one input partition as on seven") {
+    import graft.operators.{Ann, Curation, Dedup, TextOps}
+    import org.apache.spark.sql.DataFrame
+    val docs = SparkEntry.docsWithDups(spark, sf)
+    val emb = SparkEntry.embWithDups(spark, sf)
+    val queries = spark.read.parquet(s"$sf/embeddings.parquet").filter(col("vec_id") < 16)
+    val ops: Seq[(String, (DataFrame, DataFrame) => DataFrame)] = Seq(
+      "Dedup.minhashLsh" -> ((d, _) => Dedup.minhashLsh(d, 0.5)),
+      "Dedup.simhash" -> ((d, _) => Dedup.simhash(d)),
+      "Dedup.ngramJaccard" -> ((d, _) => Dedup.ngramJaccard(d, 0.5)),
+      "Dedup.embedCosineGated" -> ((_, e) => Dedup.embedCosineGated(e, 0.4)),
+      "Ann.lshTopK" -> ((_, e) => Ann.lshTopK(e, queries, k = 10)),
+      "TextOps.fingerprint" -> ((d, _) => TextOps.fingerprint(d)),
+      "Curation.dupClusters" -> ((d, _) => Curation.dupClusters(Dedup.minhashLsh(d, 0.5))),
+      "Curation.dupClustersFixpoint" ->
+        ((d, _) => Curation.dupClustersFixpoint(Dedup.minhashLsh(d, 0.5))))
+    def rows(df: DataFrame): Seq[String] = df.collect().map(_.toString).toSeq.sorted
+    for ((name, op) <- ops) {
+      val one = rows(op(docs.coalesce(1), emb.coalesce(1)))
+      val seven = rows(op(docs.repartition(7), emb.repartition(7)))
+      assert(one.nonEmpty, s"$name: empty output proves nothing")
+      assert(one == seven, s"$name: output depends on the input partitioning")
+    }
+  }
+
   test("stratified sample: deterministic, per-stratum rates roughly honored") {
     val out = SparkEntry.queries("curate_sample")(spark, sf)
     val out2 = SparkEntry.queries("curate_sample")(spark, sf)

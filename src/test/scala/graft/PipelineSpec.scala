@@ -143,6 +143,23 @@ class PipelineSpec extends AnyFunSuite {
     assert(m.select("run_id").distinct().count() >= 2)
   }
 
+  test("IcebergLite manifests record the rows each snapshot holds") {
+    val outDir = freshOut()
+    val docs = Gen.readDocs(spark, corpusDir)
+    val media = Gen.readMedia(spark, corpusDir)
+    val half = docs.filter(abs(hash(col("doc_id"))) % 2 === 0)
+    Runner.run(spark, half, media, outDir, "run-1")
+    Runner.run(spark, docs, media, outDir, "run-2")
+    val Rows = "\"rows\":(\\d+)".r.unanchored
+    for (dir <- Seq(Runner.extractedDir(outDir), Runner.metricsDir(outDir)); id <- 0L to 1L) {
+      val manifest = new String(java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get(s"$dir/snapshots/$id.json")), "UTF-8")
+      val Rows(rows) = manifest: @unchecked
+      assert(rows.toLong == IcebergLite.readSnapshot(spark, dir, id).count(),
+        s"$dir snapshot $id: $manifest")
+    }
+  }
+
   test("resume semi-join gate: phase 2 extracts ONLY the missing docs' media") {
     val outDir = freshOut()
     val docs = Gen.readDocs(spark, corpusDir)
