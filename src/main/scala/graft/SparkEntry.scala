@@ -84,9 +84,9 @@ object SparkEntry {
   }
 
   // ------------------------------------------------------------- queries
-  /** Every query builder first applies the one-time session tuning
-    * (Par.tune: parallelism-first AQE coalescing for this CPU-heavy-per-
-    * byte workload; no-op at scale and on already-tuned sessions).
+  /** Every query builder first applies the session tuning (Par.tune:
+    * parallelism-first AQE coalescing for this CPU-heavy-per-byte
+    * workload; no-op at scale).
     */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     rawQueries.map { case (name, f) =>
@@ -184,9 +184,9 @@ object SparkEntry {
     }),
     "x_media_features" -> ((s, dir) =>
       // feature is array<float>: serialize for driver canonicalization.
-      // Shared one-decode analysis table (Multimodal.imageAnalysisCached):
-      // the two image-dedup queries reuse the same pixel-decode pass.
-      Multimodal.imageAnalysisCached(s, corpusMedia(s, dir), dir)
+      // Shared analysis table (Multimodal.imageAnalysisCached): the two
+      // image-dedup queries reuse the same pixel-decode pass.
+      Multimodal.imageAnalysisCached(s, corpusMedia(s, dir))
         .select(col("media_ref"), col("content_type"), col("width"),
           col("height"), col("exif_software"), col("feature"),
           col("pixel_decode"), col("decode_ok"))
@@ -199,15 +199,13 @@ object SparkEntry {
       // content-level near-dup images: real pixel decode -> aHash ->
       // banded Hamming join; catches the corpus's planted re-encodes
       // (same plane, different PNG filters) that byte dedup misses
-      graft.operators.ImageOps.dupImages(s, corpusMedia(s, dir),
-        cacheKey = Some(dir))),
+      graft.operators.ImageOps.dupImages(s, corpusMedia(s, dir))),
     "x_image_dups_xcodec" -> ((s, dir) =>
       // perceptual (DCT pHash) near-dups: pairs the corpus's planted
       // smooth planes stored as lossless PNG in one doc and lossy JPEG
       // q90 in another — content-level dedup across codecs
       graft.operators.ImageOps.dupImages(s, corpusMedia(s, dir),
-        maxHamming = 12, blocks = 8, perceptual = true,
-        cacheKey = Some(dir))),
+        maxHamming = 12, blocks = 8, perceptual = true)),
     "x_audio_features" -> ((s, dir) =>
       // real PCM decode (kernel/PixelDecode.WavDecoder): round floats so
       // driver canonicalization is platform-stable
@@ -398,8 +396,8 @@ object SparkEntry {
     // ---- dedup suite (oracled)
     "dedup_exact" -> ((s, dir) => Dedup.exact(docsWithDups(s, dir))),
     // the verified pairs are shared with the two cluster queries below
-    // through a keyed one-slot persist (compute once, reuse twice)
-    "dedup_minhash_lsh" -> ((s, dir) => Dedup.minhashLshCached(docsWithDups(s, dir), 0.5, dir)),
+    // through a persist that CacheManager matches by plan
+    "dedup_minhash_lsh" -> ((s, dir) => Dedup.minhashLshCached(docsWithDups(s, dir), 0.5)),
     "dedup_simhash" -> ((s, dir) => Dedup.simhash(t(s, dir, "documents"))),
     "dedup_simhash_pairs" -> ((s, dir) => Dedup.simhashPairs(docsWithDups(s, dir))),
     "dedup_jaccard" -> ((s, dir) => Dedup.ngramJaccard(docsWithDups(s, dir), 0.5)),
@@ -430,11 +428,11 @@ object SparkEntry {
     "curate_filter" -> ((s, dir) =>
       Curation.filterPipeline(docsWithDups(s, dir))),
     "dedup_clusters" -> ((s, dir) =>
-      Curation.dupClusters(Dedup.minhashLshCached(docsWithDups(s, dir), 0.5, dir))),
+      Curation.dupClusters(Dedup.minhashLshCached(docsWithDups(s, dir), 0.5))),
     // fixpoint mode (connected components): converges for ANY diameter;
     // oracled via a DuckDB recursive-CTE transitive closure
     "dedup_clusters_fix" -> ((s, dir) =>
-      Curation.dupClustersFixpoint(Dedup.minhashLshCached(docsWithDups(s, dir), 0.5, dir))),
+      Curation.dupClustersFixpoint(Dedup.minhashLshCached(docsWithDups(s, dir), 0.5))),
 
     // ---- text analysis (oracled except langid)
     "text_quality" -> ((s, dir) => TextOps.quality(t(s, dir, "documents"))),

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** Deduplication operators for large-scale training-data pipelines, all
   * expressed as pure Catalyst column expressions (codegen'd, no UDFs) so
@@ -110,28 +111,17 @@ object Dedup {
       .orderBy("doc_a", "doc_b")
   }
 
-  // One-slot cache for the verified minhash-LSH pairs table: three
-  // independent driver queries (dedup_minhash_lsh, dedup_clusters,
-  // dedup_clusters_fix) consume the SAME pairs. A 100 TB pipeline
-  // materializes pairs once and reuses them; mirroring that, the first
-  // consumer computes + persists, later consumers pay only propagation.
-  // Keyed by (applicationId, caller key, threshold) and validated
-  // against the live session (same contract as ImageOps.imageHashesCached).
-  @volatile private var pairsCache: Option[(String, DataFrame)] = None
-
-  def minhashLshCached(docs: DataFrame, threshold: Double,
-      key: String): DataFrame = synchronized {
-    val spark = docs.sparkSession
-    val k = spark.sparkContext.applicationId + "|" + key + "|" + threshold
-    pairsCache match {
-      case Some((ck, df)) if ck == k && (df.sparkSession eq spark) => df
-      case prev =>
-        prev.filter(_._2.sparkSession eq spark).foreach(_._2.unpersist())
-        val df = minhashLsh(docs, threshold)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        pairsCache = Some((k, df))
-        df
-    }
+  /** [[minhashLsh]] persisted (MEMORY_AND_DISK) on first use: three
+    * queries (dedup_minhash_lsh, dedup_clusters, dedup_clusters_fix)
+    * consume the same verified pairs, and Spark's CacheManager substitutes
+    * the persisted table into every later plan of the same pairs over the
+    * same input, so the first consumer computes them and the others pay
+    * only propagation.
+    */
+  def minhashLshCached(docs: DataFrame, threshold: Double): DataFrame = {
+    val df = minhashLsh(docs, threshold)
+    if (df.storageLevel == StorageLevel.NONE) df.persist(StorageLevel.MEMORY_AND_DISK)
+    else df
   }
 
   /** Per-doc SimHash signatures, unsorted (building block). */

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.kernel.{Magic, RawImage}
+import graft.kernel.RawImage
 
 /** Perceptual image operators over the REAL pixel decoders
   * (kernel/PixelDecode.scala): box-filter resize, 64-bit average-hash, and
@@ -123,40 +123,6 @@ object ImageOps {
     hash
   }
 
-  /** Per-image perceptual hashes for every pixel-decodable payload:
-    * (media_ref, ahash, phash, width, height). BOTH hashes come out of a
-    * single pixel-decode pass — decode dominates the cost, so every
-    * consumer (exact-pixel dedup via ahash, cross-codec dedup via phash)
-    * shares one decode of each image. Kernels run inside the media scan
-    * stage; only the 36-byte hash rows cross any exchange downstream.
-    */
-  def imageHashes(spark: SparkSession, media: DataFrame): DataFrame = {
-    import spark.implicits._
-    media.select(col("media_ref"), col("bytes_b64"))
-      .as[(String, String)]
-      .flatMap { case (ref, b64) =>
-        val bytes =
-          if (b64 == null || b64.isEmpty) Array.emptyByteArray
-          else java.util.Base64.getDecoder.decode(b64)
-        Multimodal.decodePixels(bytes, Magic.sniff(bytes))
-          .map(img => (ref, aHash64(img), pHash64(img), img.width, img.height))
-      }
-      .toDF("media_ref", "ahash", "phash", "width", "height")
-  }
-
-  /** Cached hash rows projected from the SHARED per-(session, dir)
-    * analysis table ([[Multimodal.imageAnalysisCached]]): x_media_features
-    * and both image-dedup queries consume one pixel-decode pass. Rows are
-    * exactly [[imageHashes]]'s (pixel_decode=true marks the payloads
-    * [[Multimodal.decodePixels]] accepts).
-    */
-  def imageHashesCached(spark: SparkSession, media: DataFrame,
-      key: String): DataFrame =
-    Multimodal.imageAnalysisCached(spark, media, key)
-      .filter(col("pixel_decode"))
-      .select(col("media_ref"), col("ahash"), col("phash"),
-        col("width"), col("height"))
-
   /** Content-level near-dup image pairs within `maxHamming` bits
     * (pigeonhole-complete for maxHamming <= blocks-1). Output:
     * (ref_a, ref_b, hamming). perceptual=true hashes with pHash64
@@ -164,8 +130,7 @@ object ImageOps {
     * the cross-codec dedup a byte or exact-pixel hash cannot do.
     */
   def dupImages(spark: SparkSession, media: DataFrame, maxHamming: Int = 3,
-      blocks: Int = 4, perceptual: Boolean = false,
-      cacheKey: Option[String] = None): DataFrame = {
+      blocks: Int = 4, perceptual: Boolean = false): DataFrame = {
     // pigeonhole-COMPLETE for maxHamming <= blocks-1; beyond that the
     // candidate stage needs one clean block among `blocks`, which real
     // (non-adversarial) codec noise virtually always leaves — measured
@@ -177,8 +142,11 @@ object ImageOps {
     val bitsPerBlock = 64 / blocks
     val mask = if (bitsPerBlock == 64) -1L else (1L << bitsPerBlock) - 1L
     val hashCol = if (perceptual) "phash" else "ahash"
-    val sigs = cacheKey.fold(imageHashes(spark, media))(
-        imageHashesCached(spark, media, _))
+    // hashes of the payloads Multimodal.decodePixels accepts, from the
+    // shared analysis table (one pixel decode per payload for all three
+    // image queries)
+    val sigs = Multimodal.imageAnalysisCached(spark, media)
+      .filter(col("pixel_decode"))
       .select(col("media_ref"), col(hashCol).as("ahash"))
     val blockStructs = (0 until blocks).map { b =>
       struct(lit(b).as("bi"),

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 import graft.kernel.{JpegKernel, JpegDecoder, Magic, PngDecoder, GifDecoder, BmpDecoder, TiffDecoder, WavDecoder, RawImage}
 
 /** Multimodal-column operators: image/audio/video ride as opaque binary
@@ -16,19 +17,6 @@ import graft.kernel.{JpegKernel, JpegDecoder, Magic, PngDecoder, GifDecoder, Bmp
   * container metadata decode is real).
   */
 object Multimodal {
-
-  final case class ImageFeature(
-      media_ref: String,
-      content_type: String,
-      width: Int,
-      height: Int,
-      exif_software: String,
-      // Real pixel statistics when pixel_decode=true: a dim-bin normalized
-      // luma histogram (BT.601). For the stubbed perceptual codecs the
-      // same-shaped deterministic byte-derived placeholder is used.
-      feature: Seq[Float],
-      pixel_decode: Boolean,
-      decode_ok: Boolean)
 
   /** Pixel decode for the JVM-expressible image codecs; None elsewhere
     * (H.264-in-MP4 remains the declared perceptual stub). WebP routes
@@ -76,10 +64,17 @@ object Multimodal {
     hist.map(_ / n)
   }
 
-  /** [[ImageFeature]] plus the perceptual hashes of [[ImageOps]]: ONE
-    * pixel decode serves every consumer (decode dominates the cost; the
-    * r6 design already shared one decode between the two dup queries —
-    * this extends the share to x_media_features).
+  /** Bins of the `feature` vector. */
+  val FeatureDim = 8
+
+  /** One image's metadata, features and perceptual hashes: ONE pixel
+    * decode serves every consumer (decode dominates the cost), so
+    * x_media_features and both image-dedup queries share it.
+    * `feature` is the [[FeatureDim]]-bin normalized luma histogram (BT.601)
+    * when pixel_decode=true, and a same-shaped deterministic byte-derived
+    * placeholder for payloads with metadata but no pixel decoder.
+    * ahash/phash are [[ImageOps.aHash64]] / [[ImageOps.pHash64]] and only
+    * meaningful when pixel_decode=true.
     */
   final case class ImageAnalysis(
       media_ref: String,
@@ -87,99 +82,87 @@ object Multimodal {
       width: Int,
       height: Int,
       exif_software: String,
-      feature: Seq[Float],
+      feature: Array[Float],
       pixel_decode: Boolean,
       decode_ok: Boolean,
       ahash: Long,
       phash: Long)
 
+  // One function instance for every plan: CacheManager matches a
+  // MapPartitions node by its function's identity, so a fresh closure per
+  // call would never find the persisted analysis table. For the same
+  // reason `feature` is a primitive array: a Seq field's serializer draws
+  // fresh lambda-variable ids for every encoder, so two plans never match.
+  private val analyze: Iterator[(String, String)] => Iterator[ImageAnalysis] =
+    _.map { case (ref, b64) =>
+      val bytes =
+        if (b64 == null || b64.isEmpty) Array.emptyByteArray
+        else java.util.Base64.getDecoder.decode(b64)
+      val kind = Magic.sniff(bytes)
+      val meta = imageMeta(bytes, kind)
+      val pixels = decodePixels(bytes, kind)
+      val (ah, ph) = pixels match {
+        case Some(img) => (ImageOps.aHash64(img), ImageOps.pHash64(img))
+        case None      => (0L, 0L)
+      }
+      if (meta.nonEmpty || pixels.nonEmpty) {
+        def px(k: String): Int =
+          meta.get(k).map(_.takeWhile(_.isDigit)).filter(_.nonEmpty)
+            .map(_.toInt).getOrElse(-1)
+        val (w, h) = pixels.map(i => (i.width, i.height))
+          .getOrElse((px("Image Width"), px("Image Height")))
+        val feat = pixels match {
+          case Some(img) => lumaHistogram(img, FeatureDim)
+          case None      => stubFeature(bytes, FeatureDim)
+        }
+        ImageAnalysis(ref, Magic.contentTypeOf(kind, None), w, h,
+          meta.getOrElse("Software", ""), feat,
+          pixel_decode = pixels.nonEmpty, decode_ok = true, ah, ph)
+      } else {
+        ImageAnalysis(ref, Magic.contentTypeOf(kind, None), -1, -1, "",
+          new Array[Float](FeatureDim), pixel_decode = false, decode_ok = false,
+          ah, ph)
+      }
+    }
+
   /** Decode + feature/hash-extract over a media table (media_ref,
-    * bytes_b64) in a single pixel-decode pass. Feature semantics are
-    * exactly [[imageFeatures]]'s; ahash/phash are [[ImageOps.aHash64]] /
-    * [[ImageOps.pHash64]] and only meaningful when pixel_decode=true
-    * (the rows [[ImageOps.imageHashes]] emits).
+    * bytes_b64) in a single pixel-decode pass.
+    * PNG/GIF/BMP/TIFF/JPEG/WebP: full pixel decode, real luma-histogram
+    * features; metadata-only kinds (MP4, HEIF): real header/EXIF
+    * metadata, stubbed pixel step.
     */
-  def imageAnalysis(spark: SparkSession, media: DataFrame, dim: Int = 8): Dataset[ImageAnalysis] = {
+  def imageAnalysis(spark: SparkSession, media: DataFrame): Dataset[ImageAnalysis] = {
     import spark.implicits._
     media.select(col("media_ref"), col("bytes_b64"))
       .as[(String, String)]
-      .mapPartitions { it =>
-        it.map { case (ref, b64) =>
-          val bytes =
-            if (b64 == null || b64.isEmpty) Array.emptyByteArray
-            else java.util.Base64.getDecoder.decode(b64)
-          val kind = Magic.sniff(bytes)
-          val meta = imageMeta(bytes, kind)
-          val pixels = decodePixels(bytes, kind)
-          val (ah, ph) = pixels match {
-            case Some(img) => (ImageOps.aHash64(img), ImageOps.pHash64(img))
-            case None      => (0L, 0L)
-          }
-          if (meta.nonEmpty || pixels.nonEmpty) {
-            def px(k: String): Int =
-              meta.get(k).map(_.takeWhile(_.isDigit)).filter(_.nonEmpty)
-                .map(_.toInt).getOrElse(-1)
-            val (w, h) = pixels.map(i => (i.width, i.height))
-              .getOrElse((px("Image Width"), px("Image Height")))
-            val feat = pixels match {
-              case Some(img) => lumaHistogram(img, dim).toSeq
-              case None      => stubFeature(bytes, dim)
-            }
-            ImageAnalysis(ref, Magic.contentTypeOf(kind, None), w, h,
-              meta.getOrElse("Software", ""), feat,
-              pixel_decode = pixels.nonEmpty, decode_ok = true, ah, ph)
-          } else {
-            ImageAnalysis(ref, Magic.contentTypeOf(kind, None), -1, -1, "",
-              Seq.fill(dim)(0.0f), pixel_decode = false, decode_ok = false,
-              ah, ph)
-          }
-        }
-      }
+      .mapPartitions(analyze)
   }
 
-  // One-slot cache for the combined analysis table: x_media_features,
-  // x_image_dups and x_image_dups_xcodec all consume it, so the corpus
-  // is pixel-decoded ONCE per (session, media dir). Same contract as the
-  // r5/r6 one-slot caches (Dedup.minhashLshCached).
-  @volatile private var analysisCache: Option[(String, DataFrame)] = None
-
-  def imageAnalysisCached(spark: SparkSession, media: DataFrame,
-      key: String, dim: Int = 8): DataFrame = synchronized {
-    val sessionKey = spark.sparkContext.applicationId + "|" + key + "|" + dim
-    analysisCache match {
-      case Some((k, df)) if k == sessionKey && (df.sparkSession eq spark) => df
-      case prev =>
-        prev.filter(_._2.sparkSession eq spark).foreach(_._2.unpersist())
-        val df = imageAnalysis(spark, media, dim).toDF()
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        analysisCache = Some((sessionKey, df))
-        df
-    }
-  }
-
-  /** Decode + feature-extract over a media table (media_ref, bytes_b64).
-    * PNG/GIF/BMP: full pixel decode, real luma-histogram features.
-    * JPEG/WebP/MP4: real header/EXIF metadata, stubbed pixel step.
+  /** [[imageAnalysis]] persisted (MEMORY_AND_DISK) on first use. Spark's
+    * CacheManager substitutes the persisted table into any later plan of
+    * the same analysis over the same media input, so x_media_features,
+    * x_image_dups and x_image_dups_xcodec pixel-decode each payload once
+    * per input. `key` is not read; perfbench still passes it.
     */
-  def imageFeatures(spark: SparkSession, media: DataFrame, dim: Int = 8): Dataset[ImageFeature] = {
-    import spark.implicits._
-    imageAnalysis(spark, media, dim)
-      .map(a => ImageFeature(a.media_ref, a.content_type, a.width, a.height,
-        a.exif_software, a.feature, a.pixel_decode, a.decode_ok))
+  def imageAnalysisCached(spark: SparkSession, media: DataFrame,
+      key: String = ""): DataFrame = {
+    val df = imageAnalysis(spark, media).toDF()
+    if (df.storageLevel == StorageLevel.NONE) df.persist(StorageLevel.MEMORY_AND_DISK)
+    else df
   }
 
   /** STUB decode: deterministic feature from payload bytes (stands in for
     * the perceptual-codec decode + model forward pass; keeps tests/benches
     * meaningful because it is content-sensitive and cheap).
     */
-  private def stubFeature(bytes: Array[Byte], dim: Int): Seq[Float] = {
+  private def stubFeature(bytes: Array[Byte], dim: Int): Array[Float] = {
     val acc = new Array[Long](dim)
     var i = 0
     while (i < bytes.length) {
       acc(i % dim) += (bytes(i) & 0xff)
       i += 1
     }
-    acc.map(v => (v % 1000).toFloat / 1000.0f).toSeq
+    acc.map(v => (v % 1000).toFloat / 1000.0f)
   }
 
   final case class AudioFeature(

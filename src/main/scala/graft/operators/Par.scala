@@ -3,8 +3,8 @@ package graft.operators
 /** Session tuning shared by the operator queries. */
 object Par {
 
-  /** Session tuning applied once per SparkSession before operator
-    * queries run. AQE's partition coalescing floors post-shuffle
+  /** Session tuning applied to a SparkSession before operator queries
+    * run. AQE's partition coalescing floors post-shuffle
     * partitions at spark.sql.adaptive.coalescePartitions.minPartitionSize
     * (default 1m) — sized for byte-bound stages. This engine's stages
     * are CPU-heavy per byte (kernel parse, md5 shingles, LSH dots), so a
@@ -16,16 +16,8 @@ object Par {
     * (real partitions are far above 1m, and target sizes still come
     * from advisoryPartitionSize). 64k was measured too aggressive:
     * ~0.05 s of task-launch overhead per stage on 0.1-0.3 s queries.
+    * The setting is session-scoped, so it is set on every call.
     */
-  @volatile private var tunedApp: String = ""
-
-  def tune(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val app = spark.sparkContext.applicationId
-    if (tunedApp != app) synchronized {
-      if (tunedApp != app) {
-        spark.conf.set("spark.sql.adaptive.coalescePartitions.minPartitionSize", "256k")
-        tunedApp = app
-      }
-    }
-  }
+  def tune(spark: org.apache.spark.sql.SparkSession): Unit =
+    spark.conf.set("spark.sql.adaptive.coalescePartitions.minPartitionSize", "256k")
 }

@@ -1,6 +1,6 @@
 package graft.spark
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Orchestrates one extraction run over a corpus with exact resumability
@@ -54,13 +54,15 @@ object Runner {
       sum(size(col("spans"))).as("out_spans"))
       .withColumn("snapshot_id", lit(snap))
       .withColumn("wall_ms", lit((System.nanoTime() - t0) / 1000000L))
-    IcebergLite.append(metrics, metricsDir(outDir))
+    // run totals observed on the metrics write itself (no second job)
+    val totals = Observation()
+    IcebergLite.append(metrics.observe(totals,
+        coalesce(sum(col("docs")), lit(0L)).as("n"),
+        coalesce(sum(col("docs_failed")), lit(0L)).as("f")),
+      metricsDir(outDir))
 
-    val agg = snapDf.agg(
-      count(lit(1)).as("n"),
-      coalesce(sum(when(col("status") =!= "ok", 1L).otherwise(0L)), lit(0L)).as("f"))
-      .collect()(0)
-    RunStats(runId, snap, agg.getLong(0), agg.getLong(1),
+    val agg = totals.get
+    RunStats(runId, snap, agg("n").asInstanceOf[Long], agg("f").asInstanceOf[Long],
       (System.nanoTime() - t0) / 1000000L)
   }
 

@@ -324,6 +324,59 @@ class CcittSpec extends AnyFunSuite {
       graft.kernel.Jbig2.decodeEmbedded(java.util.Arrays.copyOf(good, cut))
   }
 
+  test("CCITT and JBIG2 never throw on mutants of valid encoder output (fuzz)") {
+    // seeds are valid streams from every encoder the decoders pair with, so
+    // mutants reach the row/region decoding loops, not just header checks
+    val planes = Seq((64, 48, "noise"), (100, 33, "runs"), (17, 9, "edges"))
+      .map { case (c, r, kind) => (c, r, plane(c, r, kind, c * 13L + r)) }
+    // (name, stream, decode) per seed; decode must return, never throw
+    type Seed = (String, Array[Byte], Array[Byte] => Any)
+    val ccitt: Seq[Seed] = for {
+      (cols, rows, px) <- planes
+      k <- Seq(-1, 0, 4)
+      byteAlign <- Seq(false, true)
+    } yield (s"ccitt ${cols}x$rows k=$k align=$byteAlign",
+      CcittFax.encode(px, cols, rows, k, byteAlign),
+      (b: Array[Byte]) => CcittFax.decode(b, k, cols, rows, blackIs1 = true, byteAlign))
+    val jbig2Decode = (b: Array[Byte]) => graft.kernel.Jbig2.decodeEmbedded(b)
+    val mq: Seq[Seed] = for {
+      (cols, rows, px) <- planes
+      template <- 0 to 3
+      tpgdon <- Seq(false, true)
+    } yield (s"jbig2 mq ${cols}x$rows gb=$template tp=$tpgdon",
+      PdfWriter.jbig2Embedded(px, cols, rows, arith = true, tpgdon = tpgdon,
+        template = template), jbig2Decode)
+    val symbol: Seq[Seed] = (1L to 6L).map { seed =>
+      (s"jbig2 symbol $seed", PdfWriter.jbig2SymbolEmbedded(seed, 96, 64)._1, jbig2Decode)
+    }
+    val rng = new java.util.SplittableRandom(0xF022L)
+    val failures = Seq.newBuilder[String]
+    def run(name: String, b: Array[Byte], decode: Array[Byte] => Any): Unit =
+      try decode(b) catch { case t: Throwable => failures += s"$name: $t" }
+    for (family <- Seq(ccitt, mq, symbol); (name, orig, decode) <- family) {
+      for (trial <- 0 until 60) {
+        val b = orig.clone()
+        for (_ <- 0 until 1 + rng.nextInt(6)) {
+          val i = rng.nextInt(b.length)
+          b(i) = (b(i) ^ (1 << rng.nextInt(8))).toByte
+        }
+        run(s"$name flip $trial", b, decode)
+      }
+      for (_ <- 0 until 20) {
+        val n = rng.nextInt(orig.length)
+        run(s"$name cut at $n", java.util.Arrays.copyOf(orig, n), decode)
+      }
+      for (_ <- 0 until 20) {
+        val (other, tail, _) = family(rng.nextInt(family.size))
+        val cut = rng.nextInt(math.min(orig.length, tail.length))
+        run(s"$name + $other at $cut",
+          java.util.Arrays.copyOf(orig, cut) ++ tail.drop(cut), decode)
+      }
+    }
+    val all = failures.result()
+    assert(all.isEmpty, s"${all.size} throws:\n" + all.take(20).mkString("\n"))
+  }
+
   test("E3 jbig2: JBIG2Decode page images — metadata surfaced, text unchanged, plane exact") {
     val stanzas = Vector(Vector("Scan Title"),
       Vector("first line of text", "second line of text", "third line here"))

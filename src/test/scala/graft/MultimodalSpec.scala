@@ -28,7 +28,7 @@ class MultimodalSpec extends AnyFunSuite {
       .toDF("media_ref", "bytes_b64", "length")
   }
 
-  test("imageFeatures: real pixel decode for PNG/GIF/BMP, stub for JPEG") {
+  test("imageAnalysis: real pixel decode for PNG/GIF/BMP, stub for JPEG") {
     spark.sparkContext.setLogLevel("WARN")
     val png = PngWriterEx.write(PngWriterEx.Spec(32, 24, 7, colorType = 2, cycleFilters = true))
     val gif = GifWriter.write(GifWriter.Spec(20, 15, 8))
@@ -39,7 +39,7 @@ class MultimodalSpec extends AnyFunSuite {
     // real baseline-encoded jpeg: full pixel decode
     val jpgR = JpegWriterEx.write(JpegWriterEx.Spec(40, 28, 5,
       software = "cam-2", subsample = true))
-    val out = Multimodal.imageFeatures(spark,
+    val out = Multimodal.imageAnalysis(spark,
         mediaDF("png-1" -> png, "gif-1" -> gif, "bmp-1" -> bmp, "tif-1" -> tif,
           "jpg-1" -> jpg, "jpg-2" -> jpgR))
       .collect().map(f => f.media_ref -> f).toMap
@@ -53,14 +53,14 @@ class MultimodalSpec extends AnyFunSuite {
     assert(out("jpg-2").exif_software == "cam-2")
     // lossy VP8 WebP: REAL pixel decode (no longer the perceptual stub)
     val vp8 = graft.corpus.Vp8WriterEx.write(graft.corpus.Vp8WriterEx.Spec(44, 30, 17))
-    val outW = Multimodal.imageFeatures(spark, mediaDF("webp-vp8" -> vp8))
+    val outW = Multimodal.imageAnalysis(spark, mediaDF("webp-vp8" -> vp8))
       .collect().map(f => f.media_ref -> f).toMap
     assert(outW("webp-vp8").pixel_decode, "lossy webp must pixel-decode")
     assert(outW("webp-vp8").width == 44 && outW("webp-vp8").height == 30)
     // the PNG feature equals a direct luma-histogram computation
     val img = PngDecoder.decode(png).get
     val expect = Multimodal.lumaHistogram(img, 8).toSeq
-    assert(out("png-1").feature == expect)
+    assert(out("png-1").feature.toSeq == expect)
     // histograms are normalized: bins sum to ~1
     for (ref <- Seq("png-1", "gif-1", "bmp-1", "tif-1"))
       assert(math.abs(out(ref).feature.sum - 1.0f) < 1e-4)

@@ -1,7 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Regression tests for the training-pipeline operators (the full
@@ -270,6 +270,57 @@ class OperatorsSpec extends AnyFunSuite {
     assert(feats.filter(size(from_json(col("feature"),
       org.apache.spark.sql.types.ArrayType(
         org.apache.spark.sql.types.FloatType))) =!= 8).count() == 0)
+  }
+
+  /** Cache entries a plan reads once CacheManager has substituted them. */
+  private def cacheEntries(df: DataFrame) =
+    df.queryExecution.withCachedData.collect {
+      case r: org.apache.spark.sql.execution.columnar.InMemoryRelation => r.cacheBuilder
+    }
+
+  test("the image queries share one persisted pixel-decode table") {
+    SparkEntry.queries("x_media_features")(spark, sf).count()
+    // the analysis plan rebuilt from scratch finds the persisted table ...
+    val shared = cacheEntries(graft.operators.Multimodal.imageAnalysis(
+      spark, SparkEntry.corpusMedia(spark, sf)).toDF())
+    assert(shared.size == 1)
+    // ... and both dedup queries read that same entry
+    for (q <- Seq("x_image_dups", "x_image_dups_xcodec")) {
+      val read = cacheEntries(SparkEntry.queries(q)(spark, sf))
+      assert(read.nonEmpty && read.forall(_ eq shared.head), q)
+    }
+  }
+
+  test("the dedup cluster queries share the persisted minhash pairs") {
+    SparkEntry.queries("dedup_minhash_lsh")(spark, sf).count()
+    val docs = SparkEntry.docsWithDups(spark, sf)
+    val shared = cacheEntries(graft.operators.Dedup.minhashLsh(docs, 0.5))
+    assert(shared.size == 1)
+    // the pairs input dedup_clusters and dedup_clusters_fix pass to Curation
+    val read = cacheEntries(graft.operators.Dedup.minhashLshCached(docs, 0.5))
+    assert(read.nonEmpty && read.forall(_ eq shared.head))
+    for (q <- Seq("dedup_clusters", "dedup_clusters_fix"))
+      assert(SparkEntry.queries(q)(spark, sf).count() > 0, q)
+  }
+
+  test("separate media inputs get separate analysis tables") {
+    import graft.operators.Multimodal
+    val media = SparkEntry.corpusMedia(spark, sf)
+    val halves = Seq(0, 1).map(h => media.filter(pmod(hash(col("media_ref")), lit(2)) === h))
+    def refs(df: DataFrame) = df.select("media_ref").collect().map(_.getString(0)).toSet
+    val got = halves.map(m => refs(Multimodal.imageAnalysisCached(spark, m)))
+    halves.zip(got).foreach { case (m, rows) =>
+      assert(rows.nonEmpty && rows == refs(m))
+    }
+    assert(got(0).intersect(got(1)).isEmpty)
+  }
+
+  test("Par.tune sets the partition floor on every session") {
+    val key = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
+    graft.operators.Par.tune(spark)
+    val s2 = spark.newSession()
+    graft.operators.Par.tune(s2)
+    assert(s2.conf.get(key) == "256k")
   }
 
   test("entry() flagship returns the content-type tally") {

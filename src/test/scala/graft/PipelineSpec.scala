@@ -133,9 +133,16 @@ class PipelineSpec extends AnyFunSuite {
     val all = IcebergLite.readAll(spark, Runner.extractedDir(outDir)).get
     assert(all.count() == 400)
     assert(all.select("doc_id").distinct().count() == 400)
+    // run stats count exactly what each snapshot holds
+    for ((st, id) <- Seq(s1 -> 0L, s2 -> 1L)) {
+      val snapDf = IcebergLite.readSnapshot(spark, Runner.extractedDir(outDir), id)
+      assert(st.docsProcessed == snapDf.count(), s"snapshot $id docs")
+      assert(st.docsFailed == snapDf.filter(col("status") =!= "ok").count(),
+        s"snapshot $id failed docs")
+    }
     // re-running with nothing to do appends an empty snapshot
     val s3 = Runner.run(spark, docs, media, outDir, "run-3")
-    assert(s3.docsProcessed == 0)
+    assert(s3.docsProcessed == 0 && s3.docsFailed == 0)
     // lineage columns present
     assert(all.columns.contains("part_id") && all.columns.contains("run_id"))
     // metrics table exists with per-partition rows
