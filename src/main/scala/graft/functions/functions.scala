@@ -51,6 +51,26 @@ package object functions {
   def shingles_distinct(text: Column, n: Int): Column =
     SqlShim.column(ShinglesExpr(SqlShim.expression(text), n, distinct = true))
 
+  /** MinHash signature of a text over its 3-word shingles, in ONE
+    * expression: lane i = min over shingles sh of
+    * (HashA(i) * h + HashB(i)) % P with h = h64(sh) % P (Dedup's
+    * constants, NumHashes lanes). Same shingles, same h64 and the same
+    * non-overflowing arithmetic as the per-doc explode + pmod + min
+    * aggregation it replaces, so every lane is bit-identical (property-
+    * tested) without exploding one row per shingle or shuffling them.
+    */
+  def minhash_sig(text: Column): Column =
+    SqlShim.column(MinHashSig(SqlShim.expression(text)))
+
+  /** struct(na, nb, inter): the distinct n-word shingle counts of two
+    * texts and the size of their intersection — the three counts an
+    * exact Jaccard needs, from one in-row hash-set probe instead of
+    * exploding both shingle sets and joining them. Sets are those of
+    * [[shingles_distinct]] (binary UTF8String equality).
+    */
+  def shingle_overlap(a: Column, b: Column, n: Int): Column =
+    SqlShim.column(ShingleOverlap(SqlShim.expression(a), SqlShim.expression(b), n))
+
   /** All `nTables` LSH signatures of a vector in ONE expression: sig[t] =
     * OR over bits b of (dot(v, hyperplane(t,b)) >= 0) << b, with the dot
     * folded left exactly like [[dot_f64]] — bit-identical to the column-
@@ -108,9 +128,6 @@ package functions {
     def langOf(s: UTF8String): UTF8String =
       UTF8String.fromString(graft.kernel.Lang.detect(if (s == null) null else s.toString))
     private val SpaceU = UTF8String.fromString(" ")
-    private val EmptyShingles =
-      new org.apache.spark.sql.catalyst.util.GenericArrayData(
-        Array[Any](UTF8String.EMPTY_UTF8))
 
     /** n-word shingle array of `text` (null text behaves like the HOF
       * form: lower/split/slice propagate null into concat_ws, which
@@ -118,34 +135,69 @@ package functions {
       */
     def shingles(text: UTF8String, n: Int,
         distinct: Boolean): org.apache.spark.sql.catalyst.util.ArrayData = {
-      if (text == null) return EmptyShingles
+      val out = if (distinct) shingleSet(text, n).toArray else shingleArray(text, n)
+      new org.apache.spark.sql.catalyst.util.GenericArrayData(out.asInstanceOf[Array[Any]])
+    }
+
+    private def shingleArray(text: UTF8String, n: Int): Array[UTF8String] = {
+      if (text == null) return Array(UTF8String.EMPTY_UTF8)
       val toks = text.toLowerCase.split(SpaceU, -1)
-      val m = math.max(toks.length - (n - 1), 1)
-      if (distinct) {
-        val set = new java.util.LinkedHashSet[UTF8String](m * 2)
-        var j = 0
-        while (j < m) {
-          val end = math.min(j + n, toks.length)
-          set.add(UTF8String.concatWs(SpaceU,
-            java.util.Arrays.copyOfRange(toks, j, end): _*))
-          j += 1
-        }
-        val out = new Array[Any](set.size)
-        val it = set.iterator()
-        var i = 0
-        while (it.hasNext) { out(i) = it.next(); i += 1 }
-        new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
-      } else {
-        val out = new Array[Any](m)
-        var j = 0
-        while (j < m) {
-          val end = math.min(j + n, toks.length)
-          out(j) = UTF8String.concatWs(SpaceU,
-            java.util.Arrays.copyOfRange(toks, j, end): _*)
-          j += 1
-        }
-        new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
+      val out = new Array[UTF8String](math.max(toks.length - (n - 1), 1))
+      var j = 0
+      while (j < out.length) {
+        val end = math.min(j + n, toks.length)
+        out(j) = UTF8String.concatWs(SpaceU,
+          java.util.Arrays.copyOfRange(toks, j, end): _*)
+        j += 1
       }
+      out
+    }
+
+    // first-occurrence order (shingles_distinct's array order)
+    private def shingleSet(text: UTF8String, n: Int): java.util.LinkedHashSet[UTF8String] = {
+      val sh = shingleArray(text, n)
+      val set = new java.util.LinkedHashSet[UTF8String](sh.length * 2)
+      var j = 0
+      while (j < sh.length) { set.add(sh(j)); j += 1 }
+      set
+    }
+
+    private val MinHashA = graft.operators.Dedup.HashA.toArray
+    private val MinHashB = graft.operators.Dedup.HashB.toArray
+    private val MinHashP = graft.operators.Dedup.P
+
+    /** MinHash lanes of `text`'s 3-shingles (see functions.minhash_sig).
+      * h64 >= 0 and a, b, h < P < 2^31, so `%` equals Catalyst's pmod
+      * and a * h + b never overflows.
+      */
+    def minhashSig(text: UTF8String): org.apache.spark.sql.catalyst.util.ArrayData = {
+      val mins = Array.fill(MinHashA.length)(Long.MaxValue)
+      val sh = shingleArray(text, 3)
+      var j = 0
+      while (j < sh.length) {
+        val h = h64(sh(j)) % MinHashP
+        var i = 0
+        while (i < mins.length) {
+          val v = (MinHashA(i) * h + MinHashB(i)) % MinHashP
+          if (v < mins(i)) mins(i) = v
+          i += 1
+        }
+        j += 1
+      }
+      new org.apache.spark.sql.catalyst.util.GenericArrayData(mins)
+    }
+
+    /** (|A|, |B|, |A ∩ B|) over the distinct n-shingle sets of a and b. */
+    def shingleOverlap(a: UTF8String, b: UTF8String,
+        n: Int): org.apache.spark.sql.catalyst.InternalRow = {
+      val sa = shingleSet(a, n)
+      val sb = shingleSet(b, n)
+      val (small, large) = if (sa.size <= sb.size) (sa, sb) else (sb, sa)
+      var inter = 0
+      val it = small.iterator()
+      while (it.hasNext) if (large.contains(it.next())) inter += 1
+      new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
+        Array[Any](sa.size, sb.size, inter))
     }
 
     // sign tables for lshSigs, built once per (seed, nTables, nBits, dims)
@@ -328,6 +380,60 @@ $arrayData ${ev.value} = $fn(${c.isNull} ? null : ${c.value}, $n, $distinct);"""
     }
     override protected def withNewChildInternal(c: Expression): ShinglesExpr =
       copy(child = c)
+  }
+
+  /** See [[functions.minhash_sig]]. Never null: a null text has the
+    * signature of its one "" shingle, like the explode form.
+    */
+  case class MinHashSig(child: Expression) extends UnaryExpression {
+    override def dataType: DataType = org.apache.spark.sql.types.ArrayType(
+      org.apache.spark.sql.types.LongType, containsNull = false)
+    override def nullable: Boolean = false
+    override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any =
+      Kernels.minhashSig(child.eval(input).asInstanceOf[UTF8String])
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+      import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+      import org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral
+      val c = child.genCode(ctx)
+      val fn = "graft.functions.Kernels$.MODULE$.minhashSig"
+      val arrayData = "org.apache.spark.sql.catalyst.util.ArrayData"
+      ev.copy(code = code"""${c.code}
+$arrayData ${ev.value} = $fn(${c.isNull} ? null : ${c.value});""",
+        isNull = FalseLiteral)
+    }
+    override protected def withNewChildInternal(c: Expression): MinHashSig = copy(c)
+  }
+
+  /** See [[functions.shingle_overlap]]. Never null: a null text counts
+    * as its one "" shingle, like [[ShinglesExpr]].
+    */
+  case class ShingleOverlap(left: Expression, right: Expression, n: Int)
+      extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
+    require(n >= 1, "shingle width must be >= 1")
+    import org.apache.spark.sql.types._
+    override def dataType: DataType = StructType(Seq(
+      StructField("na", IntegerType, nullable = false),
+      StructField("nb", IntegerType, nullable = false),
+      StructField("inter", IntegerType, nullable = false)))
+    override def nullable: Boolean = false
+    override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any =
+      Kernels.shingleOverlap(left.eval(input).asInstanceOf[UTF8String],
+        right.eval(input).asInstanceOf[UTF8String], n)
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+      import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+      import org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral
+      val a = left.genCode(ctx)
+      val b = right.genCode(ctx)
+      val fn = "graft.functions.Kernels$.MODULE$.shingleOverlap"
+      val row = "org.apache.spark.sql.catalyst.InternalRow"
+      ev.copy(code = code"""${a.code}
+${b.code}
+$row ${ev.value} = $fn(
+  ${a.isNull} ? null : ${a.value}, ${b.isNull} ? null : ${b.value}, $n);""",
+        isNull = FalseLiteral)
+    }
+    override protected def withNewChildrenInternal(l: Expression, r: Expression): ShingleOverlap =
+      copy(left = l, right = r)
   }
 
   /** See [[functions.text_stats]]. */

@@ -37,15 +37,6 @@ object Dedup {
   // through ICU whose one-time init stalls the first 32-task stage
   def tokens(text: Column): Column = split(graft.functions.lower_u8(text), " ")
 
-  /** 3-word shingles (whole text when shorter). Native codegen expression:
-    * the previous transform(sequence(..), j => concat_ws(slice(split(..))))
-    * form was interpreted (HOFs are CodegenFallback) and re-evaluated
-    * split(lower(text)) once per OUTPUT shingle — O(tokens x shingles)
-    * per document. ShinglesExpr tokenizes once (same UTF8String
-    * lower/split/concatWs calls, bit-identical output, property-tested).
-    */
-  def shingles(text: Column): Column = graft.functions.shingles(text, 3)
-
   /** Exact dedup: group identical texts by content hash.
     * Output: (text_hash, n_docs, representative = min doc_id, doc_ids).
     */
@@ -56,57 +47,47 @@ object Dedup {
       .filter(col("n_docs") > 1)
       .orderBy("text_hash")
 
-  /** Per-doc MinHash signature (NumHashes values). */
-  def minhashSignature(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val sh = docs.select(col(idCol).as("doc_id"),
-      explode(shingles(col(textCol))).as("sh"))
-      .withColumn("h", pmod(h64(col("sh")), lit(P)))
-    val aggs = (0 until NumHashes).map { i =>
-      min(pmod(lit(HashA(i)) * col("h") + lit(HashB(i)), lit(P))).as(s"m$i")
-    }
-    sh.groupBy("doc_id").agg(aggs.head, aggs.tail: _*)
-  }
-
   /** MinHash + LSH banding + exact-Jaccard verification.
     * Output: (doc_a, doc_b, jaccard) for verified pairs >= threshold.
+    *
+    * One projection computes each document's NumHashes-lane signature
+    * (functions.minhash_sig: no per-shingle rows, no aggregation); the
+    * bands are an explode of that one column, and the candidate pairs of
+    * the (band, bkey) self-join fetch both texts by doc_id and are
+    * verified in-row by functions.shingle_overlap.
+    *
+    * Assumes `idCol` is unique: a repeated id would fetch every text
+    * carrying it into the verification join. A candidate pair with no
+    * shared shingle has jaccard 0.0, so `threshold <= 0` keeps it (as the
+    * oracle's LEFT JOIN/coalesce does); any threshold > 0 drops it.
     */
   def minhashLsh(docs: DataFrame, threshold: Double = 0.5,
       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val sig = minhashSignature(docs, idCol, textCol)
-    // bands via a single explode over one signature subtree (a union of
-    // per-band selects would recompute the signature aggregation per band)
+    val base = docs.select(col(idCol).as("doc_id"), col(textCol).as("text"))
+    val sig = base.select(col("doc_id"), graft.functions.minhash_sig(col("text")).as("sig"))
     val bandStructs = (0 until Bands).map { b =>
-      val cols = (0 until RowsPerBand).map(r => col(s"m${b * RowsPerBand + r}"))
-      struct(lit(b).as("band"), md5(concat_ws(",", cols: _*)).as("bkey"))
+      val lanes = (0 until RowsPerBand).map(r => col("sig").getItem(b * RowsPerBand + r))
+      struct(lit(b).as("band"), md5(concat_ws(",", lanes: _*)).as("bkey"))
     }
     val bands = sig.select(col("doc_id"), explode(array(bandStructs: _*)).as("bb"))
       .select(col("doc_id"), col("bb.band").as("band"), col("bb.bkey").as("bkey"))
-    // the self-join's two sides shuffle identically on (band, bkey) =>
-    // Spark's ReuseExchange materializes the subtree once when shuffled;
-    // at bench scale the planner broadcasts one side — the rebuilt band
-    // projection is an agg over the reused Exchange(doc_id), so the md5
-    // shingle pass still runs once (verified in the r7 plan captures)
-    val cand = bands.as("x").join(bands.as("y"),
+    // shuffle_hash gives both sides the identical Exchange(band, bkey)
+    // subtree, which ReuseExchange runs once: one signature pass. The
+    // planner's broadcast pick computed the signatures once per side
+    // (20-25% more wall and CPU for this operator at 3k docs, local[2]).
+    val cand = bands.as("x").hint("shuffle_hash").join(bands.as("y").hint("shuffle_hash"),
         col("x.band") === col("y.band") && col("x.bkey") === col("y.bkey") &&
         col("x.doc_id") < col("y.doc_id"))
       .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
       .distinct()
-    // exact verification on shingle sets; `cand` is consumed exactly once
-    // (a zero-intersection candidate cannot reach any threshold > 0, so no
-    // left join back onto cand is needed)
-    val shs = docs.select(col(idCol).as("doc_id"),
-      explode(graft.functions.shingles_distinct(col(textCol), 3)).as("sh"))
-    val counts = shs.groupBy("doc_id").agg(count(lit(1)).as("n"))
-    val inter = cand
-      .join(shs.as("sa"), col("doc_a") === col("sa.doc_id"))
-      .join(shs.as("sb"), col("doc_b") === col("sb.doc_id") && col("sa.sh") === col("sb.sh"))
-      .groupBy("doc_a", "doc_b").agg(count(lit(1)).as("inter"))
-    inter
-      .join(counts.as("ca"), col("doc_a") === col("ca.doc_id"))
-      .join(counts.as("cb"), col("doc_b") === col("cb.doc_id"))
+    val ov = cand
+      .join(base.as("a"), col("doc_a") === col("a.doc_id"))
+      .join(base.as("b"), col("doc_b") === col("b.doc_id"))
       .select(col("doc_a"), col("doc_b"),
-        round(col("inter").cast("double") /
-          (col("ca.n") + col("cb.n") - col("inter")), 6).as("jaccard"))
+        graft.functions.shingle_overlap(col("a.text"), col("b.text"), 3).as("o"))
+    ov.select(col("doc_a"), col("doc_b"),
+        round(col("o.inter").cast("double") /
+          (col("o.na") + col("o.nb") - col("o.inter")), 6).as("jaccard"))
       .filter(col("jaccard") >= threshold)
       .orderBy("doc_a", "doc_b")
   }

@@ -68,7 +68,7 @@ object TextOps {
     * edits and is cheap to compare at scale.
     */
   def fingerprint(docs: DataFrame, idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    // native codegen 4-gram shingles (see Dedup.shingles: the HOF form
+    // native codegen 4-gram shingles (see functions.shingles: the HOF form
     // re-split the text once per output shingle, O(tokens x shingles))
     val sh = graft.functions.shingles(col(textCol), 4)
     docs.select(col(idCol).as("doc_id"), explode(sh).as("s"))

@@ -128,10 +128,11 @@ object Pipeline {
     // nothing from the span row. Unreferenced media (the resume case) is
     // gated out by a broadcast semi-join on keys BEFORE payloads are
     // decoded — see Config.gateMediaByReference.
-    // the span join repartitions media spans on media_ref; deriving the
-    // gate's key set from the SAME repartitioned subtree makes the two
-    // identical exchanges reuse one docs scan+explode (plan-audited: the
-    // separate keys subtree re-scanned docs once per pass)
+    // the span join repartitions media spans on media_ref. The gate's key
+    // set below is derived from this subtree, but the two exchanges are
+    // NOT reused: ColumnPruning pushes the keys' select(media_ref) below
+    // the repartition, so the gate's Exchange hashpartitioning(media_ref)
+    // carries one column and reads its own docs scan+explode on a resume
     val mediaSpansParted = spanRows(withText = false)
       .filter(col("media_ref").isNotNull)
       .repartition(p, col("media_ref"))

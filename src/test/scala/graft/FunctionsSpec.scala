@@ -57,6 +57,21 @@ class FunctionsSpec extends AnyFunSuite {
     assert(plan.toLowerCase.contains("sniffmime"), plan)
     assert(df.collect().map(_.getString(0)).sorted.toSeq ==
       Seq("application/octet-stream", "application/pdf"))
+
+    val texts = spark.range(3)
+      .select(concat_ws(" ", lit("w x"), col("id").cast("string")).as("a"),
+        concat_ws(" ", lit("w x y"), col("id").cast("string")).as("b"))
+      .select(graft.functions.minhash_sig(col("a")).as("sig"),
+        graft.functions.shingle_overlap(col("a"), col("b"), 3).as("o"))
+    val tPlan = texts.queryExecution.executedPlan
+    assert(tPlan.toString.contains("*(1)"), tPlan)
+    for (name <- Seq("minhashsig", "shingleoverlap"))
+      assert(tPlan.toString.toLowerCase.contains(name), tPlan)
+    val fallbacks = tPlan.expressions.flatMap(_.collect {
+      case e: org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback => e
+    })
+    assert(fallbacks.isEmpty, fallbacks)
+    assert(texts.collect().forall(r => r.getSeq[Long](0).size == 16))
   }
 
   test("shingles: bit-identical to the HOF transform/slice form (incl. null/empty/unicode)") {
@@ -99,6 +114,58 @@ class FunctionsSpec extends AnyFunSuite {
     val plan = planDf.queryExecution.executedPlan.toString
     assert(plan.contains("*(1)"), plan)
     assert(planDf.collect().length == 3)
+  }
+
+  // texts for the minhash/overlap properties: the tokenizer edges plus
+  // random draws from a small vocabulary, so pairs share shingles
+  private def dedupTexts(seed: Int, n: Int): Seq[String] = {
+    val rng = new java.util.Random(seed)
+    val words = Seq("the", "Fox", "jumps", "Über", "İstanbul", "12", "a", "",
+      "ß", "ΑΣ", "dog")
+    Seq(null, "", " ", "one", "one two", "one two three", "a b c a b c a b c",
+      "x x x x x x", "Über İ ß ΑΣ", "double  gap", "the Fox jumps the fox JUMPS") ++
+      (0 until n).map(_ => (0 until rng.nextInt(14))
+        .map(_ => words(rng.nextInt(words.size))).mkString(" "))
+  }
+
+  test("minhash_sig: bit-identical to the per-doc explode + 16-min aggregation") {
+    import spark.implicits._
+    import graft.operators.Dedup.{HashA, HashB, NumHashes, P}
+    val texts = dedupTexts(19, 300)
+    val df = texts.zipWithIndex.map { case (t, i) => (i, t) }.toDF("id", "t")
+    // the signature form Dedup.minhashLsh computed before minhash_sig:
+    // one row per shingle, then NumHashes min aggregates per doc
+    val sh = df.select(col("id"), explode(graft.functions.shingles(col("t"), 3)).as("sh"))
+      .withColumn("h", pmod(graft.functions.h64(col("sh")), lit(P)))
+    val aggs = (0 until NumHashes).map { i =>
+      min(pmod(lit(HashA(i)) * col("h") + lit(HashB(i)), lit(P))).as(s"m$i")
+    }
+    val old = sh.groupBy("id").agg(aggs.head, aggs.tail: _*).collect()
+      .map(r => r.getInt(0) -> (1 to NumHashes).map(r.getLong)).toMap
+    val neu = df.select(col("id"), graft.functions.minhash_sig(col("t")).as("sig"))
+      .collect().map(r => r.getInt(0) -> r.getSeq[Long](1)).toMap
+    assert(old.size == texts.size && neu.size == texts.size)
+    texts.indices.foreach { i =>
+      assert(old(i) == neu(i),
+        s"text=${Option(texts(i)).map(x => "'" + x + "'").getOrElse("null")}")
+    }
+  }
+
+  test("shingle_overlap: equals the sizes of shingles_distinct and array_intersect") {
+    import spark.implicits._
+    val as = dedupTexts(23, 300)
+    val bs = dedupTexts(29, 300)
+    // every text against a random partner, itself and null
+    val pairs = as.zip(bs) ++ as.map(t => (t, t)) ++ as.map(t => (t, null: String))
+    val df = pairs.toDF("a", "b")
+    def sd(c: String) = graft.functions.shingles_distinct(col(c), 3)
+    val rows = df.select(
+      struct(size(sd("a")), size(sd("b")), size(array_intersect(sd("a"), sd("b")))).as("old"),
+      graft.functions.shingle_overlap(col("a"), col("b"), 3).as("neu")).collect()
+    rows.zip(pairs).foreach { case (r, p) =>
+      assert(r.getStruct(0) == r.getStruct(1), p)
+    }
+    assert(rows.exists(r => r.getStruct(1).getInt(2) > 0))
   }
 
   test("lower_u8: identical to Catalyst lower() (incl. unicode case edges)") {

@@ -164,6 +164,15 @@ class OperatorsSpec extends AnyFunSuite {
     }
   }
 
+  test("minhashLsh computes the signatures once: the band self-join reuses its exchange") {
+    val df = graft.operators.Dedup.minhashLsh(SparkEntry.docsWithDups(spark, sf), 0.5)
+    assert(df.collect().nonEmpty)
+    // after execution the adaptive plan string holds the final plan
+    val plan = df.queryExecution.executedPlan.toString
+    assert("ReusedExchange \\[[^\\]]*\\], Exchange hashpartitioning\\(band".r
+      .findFirstIn(plan).nonEmpty, plan)
+  }
+
   test("stratified sample: deterministic, per-stratum rates roughly honored") {
     val out = SparkEntry.queries("curate_sample")(spark, sf)
     val out2 = SparkEntry.queries("curate_sample")(spark, sf)
