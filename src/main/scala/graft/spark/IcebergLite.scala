@@ -2,6 +2,9 @@ package graft.spark
 
 import java.io.File
 import java.nio.file.{Files, Paths, StandardCopyOption}
+import com.fasterxml.jackson.annotation.JsonInclude
+import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.module.scala.DefaultScalaModule
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions.{count, lit}
 
@@ -15,13 +18,38 @@ import org.apache.spark.sql.functions.{count, lit}
   *   table/
   *     data/snap-<id>/   parquet files of one append
   *     snapshots/<id>.json  {"id":N,"parent":N-1,"dir":"data/snap-N","rows":R}
+  *                       plus, for an extraction run, its summary:
+  *                       {"run_id","wall_ms","parts":[one row of
+  *                       PartCounts per output partition]}
   *     VERSION           latest snapshot id (atomic rename commit)
   *
   * A snapshot becomes visible only when VERSION is renamed into place —
   * torn writes leave the previous snapshot current (manifest-last
-  * protocol), which is what makes resume exactly-once.
+  * protocol), which is what makes resume exactly-once. The summary is in
+  * the manifest, so a snapshot's metrics commit with its data or not at
+  * all.
   */
 object IcebergLite {
+
+  /** What the write task of output partition `part_id` put in a snapshot:
+    * `docs` rows, `docs_ok` and `docs_failed` of them by status, their
+    * payload `bytes_in` and their `out_spans`.
+    */
+  final case class PartCounts(part_id: Int, docs: Long, docs_ok: Long,
+      docs_failed: Long, bytes_in: Long, out_spans: Long)
+
+  /** A snapshot summary, as Iceberg keeps one per snapshot: the run that
+    * wrote it, that run's wall time up to the commit, and the counts of
+    * every output partition holding rows.
+    */
+  final case class Summary(run_id: String, wall_ms: Long, parts: Seq[PartCounts])
+
+  /** `snapshots/<id>.json`. */
+  final case class Manifest(id: Long, parent: Long, dir: String, rows: Long,
+      summary: Option[Summary])
+
+  private val json = new ObjectMapper().registerModule(DefaultScalaModule)
+    .setDefaultPropertyInclusion(JsonInclude.Include.NON_ABSENT)
 
   def currentSnapshot(tableDir: String): Long = {
     val v = new File(tableDir, "VERSION")
@@ -31,6 +59,10 @@ object IcebergLite {
 
   /** Append `df` as a new snapshot; returns the committed snapshot id.
     *
+    * `summary` is evaluated after the data write, so it may read what the
+    * write's tasks counted. Its partitions' `docs` must sum to the rows
+    * written, or nothing is committed.
+    *
     * Crash-safe (single writer): if a previous run died AFTER writing
     * data/manifest for this id but BEFORE the VERSION rename, that
     * snapshot is invisible (manifest-last protocol) — so this attempt may
@@ -38,7 +70,7 @@ object IcebergLite {
     * REPLACE_EXISTING on the manifest make the retry automatic instead of
     * failing on the orphaned leftovers.
     */
-  def append(df: DataFrame, tableDir: String): Long = {
+  def append(df: DataFrame, tableDir: String, summary: => Option[Summary] = None): Long = {
     val parent = currentSnapshot(tableDir)
     val id = parent + 1
     val dataDir = s"$tableDir/data/snap-$id"
@@ -48,9 +80,14 @@ object IcebergLite {
     df.observe(written, count(lit(1)).as("rows"))
       .write.mode("overwrite").parquet(dataDir)
     val rows = written.get("rows").asInstanceOf[Long]
+    val s = summary
+    s.foreach { sm =>
+      val docs = sm.parts.map(_.docs).sum
+      if (docs != rows) throw new IllegalStateException(
+        s"$tableDir snapshot $id not committed: its partitions count $docs rows, the write $rows")
+    }
     Files.createDirectories(Paths.get(s"$tableDir/snapshots"))
-    val manifest =
-      s"""{"id":$id,"parent":$parent,"dir":"data/snap-$id","rows":$rows}"""
+    val manifest = json.writeValueAsString(Manifest(id, parent, s"data/snap-$id", rows, s))
     val tmpM = Paths.get(s"$tableDir/snapshots/.$id.json.tmp")
     Files.write(tmpM, manifest.getBytes("UTF-8"))
     Files.move(tmpM, Paths.get(s"$tableDir/snapshots/$id.json"),
@@ -61,6 +98,11 @@ object IcebergLite {
       StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
     id
   }
+
+  /** The manifests of the committed snapshots, oldest first. */
+  def manifests(tableDir: String): Seq[Manifest] =
+    (0L to currentSnapshot(tableDir)).map(id =>
+      json.readValue(new File(s"$tableDir/snapshots/$id.json"), classOf[Manifest]))
 
   /** Read the union of all snapshots up to the current one; None if the
     * table has no committed snapshot.

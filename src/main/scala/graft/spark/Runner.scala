@@ -1,7 +1,11 @@
 package graft.spark
 
-import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import scala.jdk.CollectionConverters._
+import org.apache.spark.TaskContext
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.util.CollectionAccumulator
+import IcebergLite.{PartCounts, Summary}
 
 /** Orchestrates one extraction run over a corpus with exact resumability
   * and per-partition lineage + metrics (north rule):
@@ -11,8 +15,9 @@ import org.apache.spark.sql.functions._
   *    visible on the atomic manifest commit, so a crash mid-run leaves no
   *    partial state and rerunning resumes via left_anti join);
   *  - lineage: every output row carries (run_id, part_id) of the task that
-  *    produced it; metrics are aggregated per (run_id, part_id) into an
-  *    append-only metrics table (docs ok/failed, bytes in, issue taxonomy).
+  *    produced it; the same task counts its partition's docs ok/failed,
+  *    bytes in and spans out, and the counts commit in the snapshot's
+  *    manifest ([[metrics]] reads them back as a table).
   */
 object Runner {
 
@@ -21,11 +26,12 @@ object Runner {
       docsFailed: Long, wallMs: Long)
 
   def extractedDir(outDir: String) = s"$outDir/extracted"
-  def metricsDir(outDir: String) = s"$outDir/metrics"
 
   def run(spark: SparkSession, docs: DataFrame, media: DataFrame,
       outDir: String, runId: String): RunStats = {
+    import spark.implicits._
     val t0 = System.nanoTime()
+    def elapsedMs = (System.nanoTime() - t0) / 1000000L
 
     // resume: anti-join against already-committed doc_ids
     val done = IcebergLite.readAll(spark, extractedDir(outDir))
@@ -36,34 +42,53 @@ object Runner {
     // (the gate's purpose); fresh runs skip the gate's extra docs scan —
     // output rows are identical either way (see Config.gateMediaByReference)
     val cfg = Pipeline.Config(gateMediaByReference = done.isDefined)
+    val counted = spark.sparkContext.collectionAccumulator[PartCounts](s"parts of $runId")
     val extracted = Pipeline.extract(spark, todo, media, cfg)
+      .mapPartitions(countInto(counted))
       .toDF()
       .withColumn("part_id", spark_partition_id())
       .withColumn("run_id", lit(runId))
 
-    val snap = IcebergLite.append(extracted, extractedDir(outDir))
+    // the summary is read after the write, from what its tasks counted
+    def parts = counted.value.asScala.toSeq.sortBy(_.part_id)
+    val snap = IcebergLite.append(extracted, extractedDir(outDir),
+      Some(Summary(runId, elapsedMs, parts)))
+    RunStats(runId, snap, parts.map(_.docs).sum, parts.map(_.docs_failed).sum, elapsedMs)
+  }
 
-    // metrics from the just-committed snapshot (reads back extracted text
-    // only; payload bytes are long gone)
-    val snapDf = IcebergLite.readSnapshot(spark, extractedDir(outDir), snap)
-    val metrics = snapDf.groupBy(col("run_id"), col("part_id")).agg(
-      count(lit(1)).as("docs"),
-      sum(when(col("status") === "ok", 1L).otherwise(0L)).as("docs_ok"),
-      sum(when(col("status") =!= "ok", 1L).otherwise(0L)).as("docs_failed"),
-      sum(col("bytes_in")).as("bytes_in"),
-      sum(size(col("spans"))).as("out_spans"))
-      .withColumn("snapshot_id", lit(snap))
-      .withColumn("wall_ms", lit((System.nanoTime() - t0) / 1000000L))
-    // run totals observed on the metrics write itself (no second job)
-    val totals = Observation()
-    IcebergLite.append(metrics.observe(totals,
-        coalesce(sum(col("docs")), lit(0L)).as("n"),
-        coalesce(sum(col("docs_failed")), lit(0L)).as("f")),
-      metricsDir(outDir))
+  /** Passes `rows` through and, when the task ends, adds their counts to
+    * `acc` under the task's partition id. In the write's result stage that
+    * id is the rows' `part_id`, and Spark merges the update of each
+    * partition exactly once, retried tasks included.
+    */
+  private def countInto(acc: CollectionAccumulator[PartCounts])(
+      rows: Iterator[ExtractedRow]): Iterator[ExtractedRow] = {
+    val part = TaskContext.getPartitionId()
+    var docs, ok, bytesIn, spans = 0L
+    TaskContext.get().addTaskCompletionListener[Unit] { _ =>
+      if (docs > 0) acc.add(PartCounts(part, docs, ok, docs - ok, bytesIn, spans))
+    }
+    rows.map { r =>
+      docs += 1
+      if (r.status == "ok") ok += 1
+      bytesIn += r.bytes_in
+      spans += r.spans.size
+      r
+    }
+  }
 
-    val agg = totals.get
-    RunStats(runId, snap, agg("n").asInstanceOf[Long], agg("f").asInstanceOf[Long],
-      (System.nanoTime() - t0) / 1000000L)
+  /** Per-partition metrics of every committed run, from the snapshot
+    * manifests: run_id, part_id, docs, docs_ok, docs_failed, bytes_in,
+    * out_spans, snapshot_id, wall_ms (the run's wall time up to its
+    * commit). A run that extracted nothing has no rows.
+    */
+  def metrics(spark: SparkSession, outDir: String): DataFrame = {
+    import spark.implicits._
+    IcebergLite.manifests(extractedDir(outDir)).flatMap { m =>
+      m.summary.toSeq.flatMap(s => s.parts.map(p => (s.run_id, p.part_id, p.docs,
+        p.docs_ok, p.docs_failed, p.bytes_in, p.out_spans, m.id, s.wall_ms)))
+    }.toDF("run_id", "part_id", "docs", "docs_ok", "docs_failed", "bytes_in",
+      "out_spans", "snapshot_id", "wall_ms")
   }
 
   /** Issue-taxonomy rollup over the whole extracted table (the reference's

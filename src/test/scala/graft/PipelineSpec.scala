@@ -95,8 +95,6 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("doc-level envelope: content types, language, sorted metadata") {
-    val docs = Gen.readDocs(spark, corpusDir).limit(0) // placeholder no-op
-    assert(docs.count() == 0)
     val out = Pipeline.extract(spark,
       Gen.readDocs(spark, corpusDir), Gen.readMedia(spark, corpusDir)).toDF().cache()
     // content types observed match the claimed major kinds
@@ -116,6 +114,7 @@ class PipelineSpec extends AnyFunSuite {
       !array_contains(col("metadata.key"), "rika:language") ||
       !array_contains(col("metadata.key"), "rika:data-source")).count()
     assert(missing == 0)
+    out.unpersist()
   }
 
   test("exact resume: two-phase run produces the full result exactly once") {
@@ -143,11 +142,54 @@ class PipelineSpec extends AnyFunSuite {
     // re-running with nothing to do appends an empty snapshot
     val s3 = Runner.run(spark, docs, media, outDir, "run-3")
     assert(s3.docsProcessed == 0 && s3.docsFailed == 0)
+    assert(IcebergLite.manifests(Runner.extractedDir(outDir)).last.rows == 0)
     // lineage columns present
     assert(all.columns.contains("part_id") && all.columns.contains("run_id"))
-    // metrics table exists with per-partition rows
-    val m = IcebergLite.readAll(spark, Runner.metricsDir(outDir)).get
-    assert(m.select("run_id").distinct().count() >= 2)
+    // per-partition metrics of both runs that extracted docs; none of run-3
+    val m = Runner.metrics(spark, outDir)
+    assert(m.select("run_id").distinct().collect().map(_.getString(0)).toSet ==
+      Set("run-1", "run-2"))
+    assert(m.filter(col("run_id") === "run-3").count() == 0)
+  }
+
+  /** What the per-partition metrics of a snapshot must be: an aggregate
+    * over the rows it holds, by the lineage columns they carry.
+    */
+  def metricsOracle(snapDf: org.apache.spark.sql.DataFrame) =
+    snapDf.groupBy(col("run_id"), col("part_id")).agg(
+      count(lit(1)).as("docs"),
+      sum(when(col("status") === "ok", 1L).otherwise(0L)).as("docs_ok"),
+      sum(when(col("status") =!= "ok", 1L).otherwise(0L)).as("docs_failed"),
+      sum(col("bytes_in")).as("bytes_in"),
+      sum(size(col("spans"))).as("out_spans"))
+
+  test("run metrics equal the aggregate over each committed snapshot, fresh and resumed") {
+    val outDir = freshOut()
+    val docs = Gen.readDocs(spark, corpusDir)
+    val media = Gen.readMedia(spark, corpusDir)
+    val half = docs.filter(abs(hash(col("doc_id"))) % 2 === 0)
+    // all 8 shuffle partitions write, so counts must land on the right part_id
+    val coalesce = "spark.sql.adaptive.coalescePartitions.enabled"
+    spark.conf.set(coalesce, "false")
+    val stats = try Seq(Runner.run(spark, half, media, outDir, "run-1"),
+      Runner.run(spark, docs, media, outDir, "run-2"))
+    finally spark.conf.unset(coalesce)
+    val manifests = IcebergLite.manifests(Runner.extractedDir(outDir))
+    val metrics = Runner.metrics(spark, outDir)
+    for ((st, id) <- stats.zip(Seq(0L, 1L))) {
+      val got = metrics.filter(col("snapshot_id") === id).drop("snapshot_id", "wall_ms")
+      val want = metricsOracle(
+        IcebergLite.readSnapshot(spark, Runner.extractedDir(outDir), id))
+      assert(got.count() == want.count() && got.count() > 1, s"snapshot $id partitions")
+      assert(got.exceptAll(want).count() == 0 && want.exceptAll(got).count() == 0,
+        s"snapshot $id: ${got.collect().mkString(",")} vs ${want.collect().mkString(",")}")
+      val totals = got.agg(sum("docs"), sum("docs_failed")).head()
+      assert(totals.getLong(0) == st.docsProcessed && totals.getLong(1) == st.docsFailed,
+        s"snapshot $id stats")
+      assert(totals.getLong(0) == manifests(id.toInt).rows, s"snapshot $id manifest rows")
+    }
+    assert(metrics.select("run_id", "snapshot_id").distinct().collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toSet == Set("run-1" -> 0L, "run-2" -> 1L))
   }
 
   test("IcebergLite manifests record the rows each snapshot holds") {
@@ -158,12 +200,19 @@ class PipelineSpec extends AnyFunSuite {
     Runner.run(spark, half, media, outDir, "run-1")
     Runner.run(spark, docs, media, outDir, "run-2")
     val Rows = "\"rows\":(\\d+)".r.unanchored
-    for (dir <- Seq(Runner.extractedDir(outDir), Runner.metricsDir(outDir)); id <- 0L to 1L) {
+    val dir = Runner.extractedDir(outDir)
+    for (id <- 0L to 1L) {
       val manifest = new String(java.nio.file.Files.readAllBytes(
         java.nio.file.Paths.get(s"$dir/snapshots/$id.json")), "UTF-8")
       val Rows(rows) = manifest: @unchecked
-      assert(rows.toLong == IcebergLite.readSnapshot(spark, dir, id).count(),
-        s"$dir snapshot $id: $manifest")
+      val snapDf = IcebergLite.readSnapshot(spark, dir, id)
+      assert(rows.toLong == snapDf.count(), s"snapshot $id: $manifest")
+      // and the rows of each partition, as its write task counted them
+      val parts = IcebergLite.manifests(dir)(id.toInt).summary.get.parts
+        .map(p => p.part_id -> p.docs).toMap
+      val held = snapDf.groupBy("part_id").count().collect()
+        .map(r => r.getInt(0) -> r.getLong(1)).toMap
+      assert(parts.values.sum == rows.toLong && parts == held, s"snapshot $id: $manifest")
     }
   }
 
@@ -231,19 +280,35 @@ class PipelineSpec extends AnyFunSuite {
 
   test("IcebergLite append is crash-safe: orphaned uncommitted snapshot is overwritten") {
     import spark.implicits._
-    val dir = s"${freshOut()}/table"
-    IcebergLite.append(Seq((1, "a")).toDF("k", "v"), dir)
+    import IcebergLite.{PartCounts, Summary}
+    val outDir = freshOut()
+    val dir = Runner.extractedDir(outDir)
+    def summary(run: String, docs: Long) = Some(Summary(run, 5L,
+      Seq(PartCounts(0, docs, docs, 0L, 7L * docs, docs))))
+    def runs = Runner.metrics(spark, outDir).collect()
+      .map(r => r.getAs[String]("run_id") -> r.getAs[Long]("docs")).toSeq
+    IcebergLite.append(Seq((1, "a")).toDF("k", "v"), dir, summary("run-a", 1L))
     // simulate a crash AFTER data write + manifest write, BEFORE the
     // VERSION rename: snapshot id 1 exists on disk but is uncommitted
     Seq((2, "b")).toDF("k", "v").write.parquet(s"$dir/data/snap-1")
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(s"$dir/snapshots/1.json"),
-      """{"id":1,"parent":0,"dir":"data/snap-1","rows":0}""")
+      """{"id":1,"parent":0,"dir":"data/snap-1","rows":1,"summary":{"run_id":"crashed",""" +
+      """"wall_ms":5,"parts":[{"part_id":0,"docs":1,"docs_ok":1,"docs_failed":0,""" +
+      """"bytes_in":7,"out_spans":1}]}}""")
+    // the orphan's metrics are invisible with its data
+    assert(runs == Seq("run-a" -> 1L))
+    // a summary that does not count the rows written is never committed
+    val bad = intercept[IllegalStateException](
+      IcebergLite.append(Seq((3, "c")).toDF("k", "v"), dir, summary("run-bad", 2L)))
+    assert(bad.getMessage.contains("not committed"))
+    assert(IcebergLite.currentSnapshot(dir) == 0 && runs == Seq("run-a" -> 1L))
     // resume must reuse id 1 automatically (overwrite), not fail
-    val id = IcebergLite.append(Seq((3, "c")).toDF("k", "v"), dir)
+    val id = IcebergLite.append(Seq((3, "c")).toDF("k", "v"), dir, summary("run-b", 1L))
     assert(id == 1)
     val all = IcebergLite.readAll(spark, dir).get.collect().map(_.getInt(0)).sorted
     assert(all.toSeq == Seq(1, 3)) // the orphaned row 2 is gone
+    assert(runs == Seq("run-a" -> 1L, "run-b" -> 1L)) // and so are its metrics
   }
 
   test("failure taxonomy: empty payloads flagged, batch completes (rika_command_spec.rb:147-160)") {
