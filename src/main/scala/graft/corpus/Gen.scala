@@ -2,7 +2,7 @@ package graft.corpus
 
 import java.util.SplittableRandom
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import graft.spark.{DocRow, MediaRow, Span}
+import graft.spark.{DocRow, IcebergLite, MediaRow, Span}
 import graft.kernel.Extract
 
 /** Deterministic corpus generator (BASELINE.json input_hint shape).
@@ -1065,15 +1065,20 @@ object Gen {
 
   // ------------------------------------------------------------- writing
 
-  /** Write docs + media + golden parquet under `dir` (idempotent: skips
-    * when a _SUCCESS-complete corpus already exists).
+  /** Write docs + media + golden parquet under `dir`, each table with the
+    * manifest its reads are planned from (idempotent: skips when all three
+    * manifests exist; a table written without one is written again, with
+    * the same rows, since the corpus is pure in (seed, doc index)).
     */
   def writeCorpus(spark: SparkSession, dir: String, nDocs: Long,
       seed: Long = Seed, overwrite: Boolean = false): Unit = {
-    val done = new java.io.File(s"$dir/golden.parquet/_SUCCESS")
-    if (done.exists() && !overwrite) return
+    if (Tables.forall(t => IcebergLite.isRecorded(s"$dir/$t")) && !overwrite) return
     import spark.implicits._
     import org.apache.spark.sql.functions.col
+    def write(table: String, df: DataFrame, partitionBy: String*): Unit = {
+      df.write.mode(SaveMode.Overwrite).partitionBy(partitionBy: _*).parquet(s"$dir/$table")
+      IcebergLite.recordTable(s"$dir/$table", df.schema)
+    }
     // generation stays wide (build() cost parallelizes across all cores),
     // but the WRITE coalesces into a bounded file count: r3 measured a
     // 256-partition x 20-kind layout producing ~5k tiny (~11 KB) parquet
@@ -1085,7 +1090,7 @@ object Gen {
     // Iceberg-style partition layout: kind_major is a physical partition
     // column (directory-level), size_class a stats-pruned data column —
     // scans with either predicate prune work before reading payloads
-    ids.map { i => val b = build(seed, i)
+    write("docs.parquet", ids.map { i => val b = build(seed, i)
         (b.doc_id, b.spans, b.size_class, b.kind_major) }
       .toDF("doc_id", "spans", "size_class", "kind_major")
       // 4 files per kind partition, stepped up only when per-file size
@@ -1098,24 +1103,24 @@ object Gen {
       // scaling corpus's 800k docs (2,368 files). 4/kind keeps multiple
       // kind-pure files per kind for scan balance (FilePartition packing
       // mixes kinds within a split) while bounding the file count.
-      .repartition(math.max(4, (nDocs / 1000000L).toInt), col("doc_id"))
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy("kind_major")
-      .parquet(s"$dir/docs.parquet")
-    ids.flatMap(i => build(seed, i).media)
+      .repartition(math.max(4, (nDocs / 1000000L).toInt), col("doc_id")),
+      "kind_major")
+    write("media.parquet", ids.flatMap(i => build(seed, i).media)
       .toDF("media_ref", "bytes_b64", "length")
-      .repartition(64, col("media_ref"))
-      .write.mode(SaveMode.Overwrite).parquet(s"$dir/media.parquet")
-    ids.map { i => val b = build(seed, i); (b.doc_id, b.golden) }
+      .repartition(64, col("media_ref")))
+    write("golden.parquet", ids.map { i => val b = build(seed, i); (b.doc_id, b.golden) }
       .toDF("doc_id", "spans")
-      .repartition(16, col("doc_id"))
-      .write.mode(SaveMode.Overwrite).parquet(s"$dir/golden.parquet")
+      .repartition(16, col("doc_id")))
   }
 
+  private val Tables = Seq("docs.parquet", "media.parquet", "golden.parquet")
+
+  // every read is planned from the table's manifest: no listing, no
+  // schema inference, no Spark job
   def readDocs(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/docs.parquet")
+    IcebergLite.readTable(spark, s"$dir/docs.parquet")
   def readMedia(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/media.parquet")
+    IcebergLite.readTable(spark, s"$dir/media.parquet")
   def readGolden(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/golden.parquet")
+    IcebergLite.readTable(spark, s"$dir/golden.parquet")
 }

@@ -321,4 +321,96 @@ class PipelineSpec extends AnyFunSuite {
     // failed docs don't suppress ok docs
     assert(out.filter(col("status") === "ok").count() > 300)
   }
+
+  test("table reads are planned from manifests: building them submits no Spark job") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val outDir = freshOut()
+    val docs = Gen.readDocs(spark, corpusDir)
+    Runner.run(spark, docs.filter(abs(hash(col("doc_id"))) % 2 === 0),
+      Gen.readMedia(spark, corpusDir), outDir, "run-1")
+    Runner.run(spark, docs, Gen.readMedia(spark, corpusDir), outDir, "run-2")
+    val table = Runner.extractedDir(outDir)
+    val sc = spark.sparkContext
+    val phase = "graft.test.phase"
+    val started = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        started.add(Option(j.properties).flatMap(p => Option(p.getProperty(phase))).getOrElse(""))
+    }
+    sc.addSparkListener(listener)
+    val built = try {
+      sc.setLocalProperty(phase, "build")
+      val reads = Seq(
+        "docs" -> (() => Gen.readDocs(spark, corpusDir),
+          () => spark.read.parquet(s"$corpusDir/docs.parquet")),
+        "media" -> (() => Gen.readMedia(spark, corpusDir),
+          () => spark.read.parquet(s"$corpusDir/media.parquet")),
+        "golden" -> (() => Gen.readGolden(spark, corpusDir),
+          () => spark.read.parquet(s"$corpusDir/golden.parquet")),
+        "readAll" -> (() => IcebergLite.readAll(spark, table).get,
+          () => spark.read.parquet(s"$table/data/snap-0", s"$table/data/snap-1")),
+        "readSnapshot" -> (() => IcebergLite.readSnapshot(spark, table, 1),
+          () => spark.read.parquet(s"$table/data/snap-1")))
+      val ours = reads.map { case (name, (read, _)) =>
+        val df = read(); (name, df, df.schema, df.rdd.getNumPartitions) }
+      sc.setLocalProperty(phase, "marker")
+      // listener events arrive in order: once the marker job is seen, every
+      // job the reads submitted has been seen too
+      spark.range(1).count()
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!started.contains("marker") && System.nanoTime() < deadline) Thread.sleep(10)
+      sc.setLocalProperty(phase, null)
+      assert(started.contains("marker"))
+      ours.zip(reads.map(_._2._2()))
+    } finally { sc.setLocalProperty(phase, null); sc.removeSparkListener(listener) }
+    assert(!started.contains("build"), s"jobs while building reads: ${started.toArray.mkString(",")}")
+    for (((name, df, schema, parts), listed) <- built) {
+      assert(schema == listed.schema, s"$name schema")
+      assert(parts == listed.rdd.getNumPartitions, s"$name partitions")
+      assert(df.count() > 0 && df.exceptAll(listed).count() == 0 &&
+        listed.exceptAll(df).count() == 0, s"$name rows")
+    }
+    // the scans name their table, and each row its snapshot's directory
+    val all = IcebergLite.readAll(spark, table).get
+    assert(all.queryExecution.executedPlan.toString.contains("/extracted/data/snap-0"))
+    assert(all.select(regexp_extract(input_file_name(), "/snap-(\\d+)/", 1)).distinct()
+      .collect().map(_.getString(0)).toSet == Set("0", "1"))
+  }
+
+  test("IcebergLite reads only committed files: a stray file is ignored, a missing one fails") {
+    import spark.implicits._
+    import java.nio.file.{Files, Paths}
+    val dir = Runner.extractedDir(freshOut())
+    IcebergLite.append(Seq((1, "a"), (2, "b")).toDF("k", "v"), dir)
+    IcebergLite.append(Seq((3, "c")).toDF("k", "v"), dir)
+    def keys(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.getInt(0)).toSeq.sorted
+    // a parquet file copied into a committed snapshot after its commit
+    val snap1 = new java.io.File(s"$dir/data/snap-1").listFiles()
+      .filter(_.getName.endsWith(".parquet")).filter(_.length > 0)
+    Files.copy(snap1.head.toPath, Paths.get(s"$dir/data/snap-0/part-stray.parquet"))
+    assert(keys(IcebergLite.readAll(spark, dir).get) == Seq(1, 2, 3))
+    assert(keys(IcebergLite.readSnapshot(spark, dir, 0)) == Seq(1, 2))
+    // a committed file that is gone, then its snapshot's whole directory
+    for (gone <- Seq(snap1.head, new java.io.File(s"$dir/data/snap-1"))) {
+      org.apache.commons.io.FileUtils.forceDelete(gone)
+      val e = intercept[java.io.FileNotFoundException](IcebergLite.readAll(spark, dir))
+      assert(e.getMessage.contains(dir) && e.getMessage.contains("snapshot 1"), e.getMessage)
+    }
+    assert(keys(IcebergLite.readSnapshot(spark, dir, 0)) == Seq(1, 2))
+  }
+
+  test("Gen tables: a table without a manifest fails naming it; writeCorpus writes it again") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-small").toString
+    Seq(("d-0", 1)).toDF("doc_id", "size_class").write.parquet(s"$dir/docs.parquet")
+    val e = intercept[java.io.FileNotFoundException](Gen.readDocs(spark, dir))
+    assert(e.getMessage.contains(s"$dir/docs.parquet"), e.getMessage)
+    // a corpus missing one manifest (an older write) is written again, the same rows
+    Gen.writeCorpus(spark, dir, nDocs = 30)
+    val golden = Gen.readGolden(spark, dir).collect().map(_.toString).sorted.toSeq
+    java.nio.file.Files.delete(java.nio.file.Paths.get(s"$dir/golden.parquet/_manifest.json"))
+    Gen.writeCorpus(spark, dir, nDocs = 30)
+    assert(Gen.readGolden(spark, dir).collect().map(_.toString).sorted.toSeq == golden)
+    assert(Gen.readDocs(spark, dir).count() == 30)
+  }
 }
