@@ -190,7 +190,7 @@ object Cli {
       sb.append("metadata:\n")
       val entries = {
         val m = out.metadata.toSeq
-        if (o.keySort) m.sortBy { case (k, _) => (k.toLowerCase, k) } else m
+        if (o.keySort) Extract.sortedByKey(m) else m
       }
       entries.foreach { case (k, v) => sb.append(s"  ${ystr(k)}: ${ystr(v)}\n") }
     }
@@ -205,7 +205,7 @@ object Cli {
     if (o.metadata) {
       val entries = {
         val m = out.metadata.toSeq
-        if (o.keySort) m.sortBy { case (k, _) => (k.toLowerCase, k) } else m
+        if (o.keySort) Extract.sortedByKey(m) else m
       }
       fields += (("metadata" ->
         entries.map { case (k, v) => s"${jstr(k)}:${jstr(v)}" }

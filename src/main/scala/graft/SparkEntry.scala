@@ -7,7 +7,7 @@ import graft.corpus.Gen
 import graft.operators.{Ann, Curation, Dedup, Multimodal, TextOps}
 import graft.spark.{IcebergLite, Pipeline, Runner}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** Driver contract — see SURVEY.md §7.
   *
   * Query groups:
   *  - x_*: the extraction engine itself over the deterministic interleaved
@@ -22,7 +22,10 @@ import graft.spark.{IcebergLite, Pipeline, Runner}
   */
 object SparkEntry {
 
-  val DataRoot = "/root/repo/data"
+  /** Corpora and extracted tables of the running checkout: `data/` under
+    * the working directory, which is the project base in sbt's forked runs.
+    */
+  val DataRoot = new File("data").getAbsolutePath
 
   private def nDocsFor(sfName: String): Long = sfName match {
     case "sf0.001" => 500L
@@ -167,7 +170,7 @@ object SparkEntry {
       graft.corpus.Gen.writeCorpus(s, corpusDir, nDocsFor(name))
       val docs = graft.corpus.Gen.readDocs(s, corpusDir).limit(300)
       val media = graft.corpus.Gen.readMedia(s, corpusDir)
-      Pipeline.extract(s, docs, media, Pipeline.Config(maxContentLength = 64))
+      Pipeline.extract(s, docs, media, maxContentLength = 64)
         .toDF()
         .select(col("doc_id"),
           aggregate(transform(col("spans"),

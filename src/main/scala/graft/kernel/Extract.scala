@@ -372,6 +372,14 @@ object Extract {
 
   // ------------------------------------------------------------- helpers
 
+  /** Metadata entries in output order: by key case-insensitively, then by
+    * exact key (reference: lib/rika/parser.rb:34). Lowercasing under
+    * `Locale.ROOT` keeps the order the same in every JVM default locale
+    * (under tr_TR, "Image Width" would lowercase to a dotless i).
+    */
+  def sortedByKey(m: Seq[(String, String)]): Seq[(String, String)] =
+    m.sortBy { case (k, _) => (k.toLowerCase(java.util.Locale.ROOT), k) }
+
   def truncate(s: String, opt: Options): String =
     if (opt.maxContentLength < 0) s
     else if (opt.maxContentLength == 0) ""

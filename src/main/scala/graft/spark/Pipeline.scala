@@ -9,63 +9,49 @@ import graft.kernel.{Extract, Lang}
   * Scale design (the reference is serial, reference: lib/rika/cli/
   * rika_command.rb:82-90; everything below is our distribution strategy):
   *
-  *  - spans are EXPLODED and extracted per-span immediately after the
-  *    media join, so raw payload bytes cross at most ONE shuffle (the
-  *    join's hash exchange on media_ref, uniformly distributed by
-  *    construction) and are dropped before any further movement;
+  *  - media payloads are decoded and extracted in the media table's own
+  *    scan stage, so raw payload bytes cross no exchange; only text-sized
+  *    extracts meet the exploded spans in the hash exchange on media_ref
+  *    (uniformly distributed by construction);
   *  - per-doc assembly is one linear exchange of EXTRACTED text only
   *    (orders of magnitude smaller than payloads); every subtree is
   *    consumed exactly once — a singles fast-path split was measured
   *    slower because any DAG fork recomputes the scan+join subtrees;
   *  - inline-text spans extract directly in the scan stage: byte-bounded
   *    scan splits (spark.sql.files.maxPartitionBytes) balance extraction
-  *    cost across cores. cfg.saltPartitions adds an explicit salted
-  *    repartition on pmod(hash(doc_id, span_idx)) — the north rule's skew
-  *    mixing for layouts where scan splits cluster heavy docs (a giant doc
-  *    is span-granular here, so a 256-span monster lands on up to 256
-  *    partitions, not one);
+  *    cost across cores. A doc's inline spans stay in its scan split, so a
+  *    doc with many heavy inline spans is one task's work; giant binary
+  *    payloads are media rows, one kernel call each in the media scan;
   *  - kernels run inside mapPartitions: parser state (lang profiles,
   *    format tables) is JVM-static, amortized per executor, mirroring the
   *    reference's one-JVM claim (reference: README.md:225-228).
   */
 object Pipeline {
 
-  final case class Config(
-      maxContentLength: Int = -1,
-      saltPartitions: Int = 0, // 0 = spark.sql.shuffle.partitions
-      /** Extract only media rows actually referenced by a doc span: a
-        * keys-only semi-join gates the media scan, so a RESUME run (99%
-        * of docs committed, anti-joined away upstream) runs kernels only
-        * on the missing 1%'s media instead of re-extracting everything.
-        * The referenced-keys side is broadcast (doc_id-sized keys; on a
-        * resume it is the small todo set by construction) so payload
-        * bytes still never cross an exchange.
-        *
-        * Default OFF (r7): on a full fresh run the gate prunes nothing —
-        * every media row is referenced — while its key set costs one
-        * extra docs scan plus a broadcast barrier before the media scan
-        * can start. Output rows are identical either way (the downstream
-        * LEFT join keyed by span-side refs drops unreferenced extracts).
-        * Runner.run turns the gate ON automatically whenever it resumes
-        * (committed snapshots exist), which is the case the gate is for.
-        */
-      gateMediaByReference: Boolean = false,
-      /** Broadcast cap for the gate's referenced-key set. A full
-        * gated run over a 100 TB corpus has ~1e9 distinct media_refs —
-        * far past any broadcast threshold and a driver OOM if forced.
-        * Above this row-count estimate the gate is DISABLED entirely
-        * (media extracts unpruned; the downstream left join keeps
-        * results identical) rather than switched to a shuffled
-        * left_semi, because a shuffled semi-join would move the MEDIA
-        * side — payload bytes — through an exchange, which this
-        * pipeline never does. Resume runs keep the broadcast: their
-        * todo set is small by construction.
-        */
-      gateBroadcastMaxKeys: Long = 4L * 1000 * 1000)
+  /** Broadcast cap of the media gate's referenced-key set, in estimated
+    * keys: the key plan's size-only statistic at ~48 B per key. That
+    * statistic is scaled from the docs INPUT's file size, not from the
+    * todo set (a left_anti join's size estimate is its left side's), so a
+    * resume over a large input is above the cap too. Above the cap the
+    * gate is dropped, not turned into a shuffled semi-join, which would
+    * move the media side (payload bytes) through an exchange.
+    */
+  private val GateBroadcastMaxKeys = 4L * 1000 * 1000
 
-  /** Full pipeline. `docs(doc_id, spans)`, `media(media_ref, bytes_b64)`. */
+  /** Full pipeline. `docs(doc_id, spans)`, `media(media_ref, bytes_b64)`.
+    *
+    * `maxContentLength` truncates extracted text (-1 = unbounded).
+    * `gateMedia` extracts only media rows a doc span references: a
+    * keys-only semi-join against a broadcast of the referenced keys gates
+    * the media scan, so a resume runs kernels only on the missing docs'
+    * media. It is off for fresh runs, where every media row is referenced
+    * and the key set would cost an extra docs scan and a broadcast barrier
+    * before the media scan. Output rows are identical either way: the
+    * span join is a LEFT join keyed by span-side refs, so unreferenced
+    * extracts drop out.
+    */
   def extract(spark: SparkSession, docs: DataFrame, media: DataFrame,
-      cfg: Config = Config()): Dataset[ExtractedRow] = {
+      maxContentLength: Int = -1, gateMedia: Boolean = false): Dataset[ExtractedRow] = {
     import spark.implicits._
 
     // branch-specialized projections. The media branch never touches the
@@ -90,21 +76,14 @@ object Pipeline {
             col("span.offset").as("span_idx"), col("span.kind").as("kind"),
             col("span.media_ref").as("media_ref"))
 
-    val p = if (cfg.saltPartitions > 0) cfg.saltPartitions
-      else spark.sessionState.conf.numShufflePartitions
-
-    val opt = Extract.Options(cfg.maxContentLength)
+    val p = spark.sessionState.conf.numShufflePartitions
+    val opt = Extract.Options(maxContentLength)
 
     // ---- text spans ----------------------------------------------------
     // inline text extracts in the scan stage: byte-bounded scan splits
     // (spark.sql.files.maxPartitionBytes) balance extraction cost across
-    // cores; optional explicit salt mixing via cfg.saltPartitions for
-    // layouts where scan splits cluster heavy docs
+    // cores
     val textSpans = spanRows(withText = true).filter(col("media_ref").isNull)
-    val textMixed =
-      if (cfg.saltPartitions > 0)
-        textSpans.repartition(p, pmod(hash(col("doc_id"), col("span_idx")), lit(p)))
-      else textSpans
 
     def extractTextRows(df: DataFrame): Dataset[SpanExtract] =
       df.select(col("doc_id"), col("span_idx"), col("kind"), col("text"))
@@ -127,7 +106,7 @@ object Pipeline {
     // Detection is content-first (D1 re-sniffs), so extraction needs
     // nothing from the span row. Unreferenced media (the resume case) is
     // gated out by a broadcast semi-join on keys BEFORE payloads are
-    // decoded — see Config.gateMediaByReference.
+    // decoded when `gateMedia` is on.
     // the span join repartitions media spans on media_ref. The gate's key
     // set below is derived from this subtree, but the two exchanges are
     // NOT reused: ColumnPruning pushes the keys' select(media_ref) below
@@ -136,23 +115,17 @@ object Pipeline {
     val mediaSpansParted = spanRows(withText = false)
       .filter(col("media_ref").isNotNull)
       .repartition(p, col("media_ref"))
-    // The gate's key set is broadcast ONLY while its size estimate is
-    // under gateBroadcastMaxKeys. Above the cap (a full run over a
-    // ~1e9-media corpus) the gate is dropped entirely rather than
-    // switched to a shuffled semi-join: a shuffled left_semi would move
-    // the MEDIA side — payload bytes — through an exchange, which this
-    // pipeline never does. Over-extraction is harmless for results (the
-    // downstream span join is a LEFT join keyed by span-side refs, so
-    // unreferenced extracts simply drop out) and a full-scale run is
-    // fully-referenced by construction; resume runs have a small todo
-    // key set and always stay on the broadcast path.
+    // The gate's key set is broadcast only while its estimate is under
+    // GateBroadcastMaxKeys (see there: the estimate is the docs input's,
+    // so a resume over a large input drops the gate too). Without the
+    // gate every media row is extracted; results are the same.
     val gatedMedia =
-      if (cfg.gateMediaByReference) {
+      if (gateMedia) {
         val keys = mediaSpansParted.select(col("media_ref")).distinct()
         val stats = keys.queryExecution.optimizedPlan.stats
         val estKeys = stats.rowCount.map(_.longValue)
           .getOrElse(stats.sizeInBytes.longValue / 48L) // ~48 B per md5-ish id row
-        if (estKeys <= cfg.gateBroadcastMaxKeys)
+        if (estKeys <= GateBroadcastMaxKeys)
           media.join(broadcast(keys), Seq("media_ref"), "left_semi")
         else media
       } else media
@@ -203,7 +176,7 @@ object Pipeline {
     // map after the (unchanged, partial-aggregated) doc_id exchange.
     val spanCols = Seq("doc_id", "span_idx", "out_kind", "blocks",
       "media_ref", "content_type", "metadata", "issue_type", "bytes_in")
-    extractTextRows(textMixed).union(mediaRows).toDF()
+    extractTextRows(textSpans).union(mediaRows).toDF()
       .groupBy(col("doc_id"))
       .agg(collect_list(struct(spanCols.map(col): _*)).as("parts"))
       .as[(String, Seq[SpanExtract])]
@@ -258,16 +231,15 @@ object Pipeline {
     val language = Lang.detect(sample.toString)
 
     // metadata merge: first span wins per key; engine-injected keys mirror
-    // the reference (reference: lib/rika/parser.rb:31-32), sorted
-    // case-insensitively (reference: lib/rika/parser.rb:34).
+    // the reference (reference: lib/rika/parser.rb:31-32), sorted by
+    // Extract.sortedByKey.
     val merged = scala.collection.mutable.LinkedHashMap[String, String]()
     parts.foreach(_.metadata.foreach(e =>
       if (!merged.contains(e.key)) merged += (e.key -> e.value)))
     merged += ("Content-Type" -> contentType)
     merged += ("rika:language" -> language)
     merged += ("rika:data-source" -> docId)
-    val metadata = merged.toSeq
-      .sortBy { case (k, _) => (k.toLowerCase, k) }
+    val metadata = Extract.sortedByKey(merged.toSeq)
       .map { case (k, v) => MetaEntry(k, v) }
 
     val issues = parts.map(_.issue_type).filter(_.nonEmpty)

@@ -40,10 +40,9 @@ object Runner {
 
     // resume runs gate the media scan by the todo set's referenced keys
     // (the gate's purpose); fresh runs skip the gate's extra docs scan —
-    // output rows are identical either way (see Config.gateMediaByReference)
-    val cfg = Pipeline.Config(gateMediaByReference = done.isDefined)
+    // output rows are identical either way (see Pipeline.extract)
     val counted = spark.sparkContext.collectionAccumulator[PartCounts](s"parts of $runId")
-    val extracted = Pipeline.extract(spark, todo, media, cfg)
+    val extracted = Pipeline.extract(spark, todo, media, gateMedia = done.isDefined)
       .mapPartitions(countInto(counted))
       .toDF()
       .withColumn("part_id", spark_partition_id())

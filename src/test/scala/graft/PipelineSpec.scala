@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.corpus.Gen
-import graft.spark.{IcebergLite, Pipeline, Runner}
+import graft.spark.{IcebergLite, MetaEntry, Pipeline, Runner, SpanExtract}
 
 /** End-to-end Spark pipeline tests: span-sequence equality against
   * generator goldens (the BASELINE.json invariant), partition-count
@@ -29,6 +29,24 @@ class PipelineSpec extends AnyFunSuite {
 
   def freshOut(): String =
     java.nio.file.Files.createTempDirectory("graft-out").toString
+
+  /** Runs `body` with the given session confs set, restoring them after. */
+  def withConf[T](confs: (String, String)*)(body: => T): T = {
+    val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally saved.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+  }
+
+  /** Scales every file-source size estimate: a 400-doc corpus then looks
+    * far above the media gate's broadcast cap to the planner.
+    */
+  val HugeInput = "spark.sql.sources.fileCompressionFactor" -> "1000000"
+
+  def goldenMismatches(df: org.apache.spark.sql.DataFrame): Long =
+    spanFingerprints(df).as("a")
+      .join(spanFingerprints(Gen.readGolden(spark, corpusDir)).as("b"), Seq("doc_id"), "full_outer")
+      .filter(col("a.fp").isNull || col("b.fp").isNull || col("a.fp") =!= col("b.fp")).count()
 
   /** Canonical per-doc span fingerprint for order-insensitive-by-doc,
     * order-sensitive-within-doc comparison.
@@ -58,31 +76,34 @@ class PipelineSpec extends AnyFunSuite {
     assert(out.count() == 400)
   }
 
-  test("pipeline is invariant to parallelism (2 vs 16 salt partitions)") {
+  test("pipeline is invariant to parallelism (2 vs 16 shuffle partitions)") {
     val docs = Gen.readDocs(spark, corpusDir)
     val media = Gen.readMedia(spark, corpusDir)
-    val a = Pipeline.extract(spark, docs, media, Pipeline.Config(saltPartitions = 2)).toDF()
-    val b = Pipeline.extract(spark, docs, media, Pipeline.Config(saltPartitions = 16)).toDF()
-    val diff = spanFingerprints(a).as("a")
-      .join(spanFingerprints(b).as("b"), Seq("doc_id"), "full_outer")
-      .filter(col("a.fp") =!= col("b.fp")).count()
-    assert(diff == 0)
+    def fingerprints(n: Int) = withConf("spark.sql.shuffle.partitions" -> n.toString,
+        "spark.sql.adaptive.coalescePartitions.enabled" -> "false") {
+      val out = Pipeline.extract(spark, docs, media).toDF()
+      assert(out.rdd.getNumPartitions == n)
+      spanFingerprints(out).collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    }
+    val (a, b) = (fingerprints(2), fingerprints(16))
+    assert(a.size == 400 && a == b)
   }
 
   test("media gate: broadcast semi-join under the key cap, dropped above it") {
     val docs = Gen.readDocs(spark, corpusDir)
     val media = Gen.readMedia(spark, corpusDir)
-    // r7: the gate defaults OFF for fresh runs (Runner re-enables it on
+    // the gate defaults OFF for fresh runs (Runner turns it on for a
     // resume); gate-shape assertions opt in explicitly
-    val below = Pipeline.extract(spark, docs, media,
-      Pipeline.Config(gateMediaByReference = true)).toDF()
+    val below = Pipeline.extract(spark, docs, media, gateMedia = true).toDF()
     val planBelow = below.queryExecution.executedPlan.toString
     assert(planBelow.contains("LeftSemi"), "gate must semi-join under the cap")
     assert(planBelow.contains("Broadcast"), "the key set must be broadcast, never shuffled")
-    // cap 0 simulates the ~1e9-key full-scale regime: the gate drops out
-    // entirely (no payload-shuffling semi-join may appear in its place)
-    val above = Pipeline.extract(spark, docs, media,
-      Pipeline.Config(gateMediaByReference = true, gateBroadcastMaxKeys = 0)).toDF()
+    // an input that looks huge to the planner (the ~1e9-key full-scale
+    // regime): the gate drops out entirely (no payload-shuffling
+    // semi-join may appear in its place)
+    val above = withConf(HugeInput) {
+      Pipeline.extract(spark, docs, media, gateMedia = true).toDF()
+    }
     val planAbove = above.queryExecution.executedPlan.toString
     assert(!planAbove.contains("LeftSemi"),
       "above the cap the gate is dropped; a shuffled semi-join would move payloads")
@@ -169,11 +190,10 @@ class PipelineSpec extends AnyFunSuite {
     val media = Gen.readMedia(spark, corpusDir)
     val half = docs.filter(abs(hash(col("doc_id"))) % 2 === 0)
     // all 8 shuffle partitions write, so counts must land on the right part_id
-    val coalesce = "spark.sql.adaptive.coalescePartitions.enabled"
-    spark.conf.set(coalesce, "false")
-    val stats = try Seq(Runner.run(spark, half, media, outDir, "run-1"),
-      Runner.run(spark, docs, media, outDir, "run-2"))
-    finally spark.conf.unset(coalesce)
+    val stats = withConf("spark.sql.adaptive.coalescePartitions.enabled" -> "false") {
+      Seq(Runner.run(spark, half, media, outDir, "run-1"),
+        Runner.run(spark, docs, media, outDir, "run-2"))
+    }
     val manifests = IcebergLite.manifests(Runner.extractedDir(outDir))
     val metrics = Runner.metrics(spark, outDir)
     for ((st, id) <- stats.zip(Seq(0L, 1L))) {
@@ -238,24 +258,20 @@ class PipelineSpec extends AnyFunSuite {
       s"gate leak: $calls kernel invocations for $expected referenced media ($totalMedia total)")
 
     // span equality unchanged: the combined table matches the goldens
-    val all = IcebergLite.readAll(spark, Runner.extractedDir(outDir)).get
-    val diff = spanFingerprints(all).as("a")
-      .join(spanFingerprints(Gen.readGolden(spark, corpusDir)).as("b"), Seq("doc_id"), "full_outer")
-      .filter(col("a.fp").isNull || col("b.fp").isNull || col("a.fp") =!= col("b.fp")).count()
-    assert(diff == 0)
+    assert(goldenMismatches(IcebergLite.readAll(spark, Runner.extractedDir(outDir)).get) == 0)
   }
 
-  test("missing media_ref -> io_error row (default and salted config)") {
+  test("missing media_ref -> io_error row (8 and 4 shuffle partitions)") {
     import spark.implicits._
     val docs = Seq(
       graft.spark.DocRow("doc-x", Seq(graft.spark.Span("pdf", null, "m-nope", 0))),
       graft.spark.DocRow("doc-y", Seq(graft.spark.Span("txt", "hello world", null, 0)))
     ).toDF()
     val media = Seq(("m-other", "aGVsbG8=", 5L)).toDF("media_ref", "bytes_b64", "length")
-    for (cfg <- Seq(Pipeline.Config(), Pipeline.Config(saltPartitions = 4))) {
-      val out = Pipeline.extract(spark, docs, media, cfg).toDF()
+    for (n <- Seq(8, 4)) withConf("spark.sql.shuffle.partitions" -> n.toString) {
+      val out = Pipeline.extract(spark, docs, media).toDF()
       val rows = out.collect().map(r => r.getString(0) -> r.getString(6)).toMap
-      assert(rows("doc-x") == "io_error", s"cfg=$cfg got $rows")
+      assert(rows("doc-x") == "io_error", s"partitions=$n got $rows")
       assert(rows("doc-y") == "")
       assert(out.count() == 2)
     }
@@ -320,6 +336,86 @@ class PipelineSpec extends AnyFunSuite {
     assert(issues.contains("empty_file"), s"issues: $issues")
     // failed docs don't suppress ok docs
     assert(out.filter(col("status") === "ok").count() > 300)
+  }
+
+  test("resume above the gate's cap: the gate is dropped, every doc committed once") {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val outDir = freshOut()
+    val docs = Gen.readDocs(spark, corpusDir)
+    val media = Gen.readMedia(spark, corpusDir)
+    Runner.run(spark, docs.filter(abs(hash(col("doc_id"))) % 2 === 0), media, outDir, "run-1")
+
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        plans.add(qe.executedPlan.toString)
+      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    def resumePlans = plans.toArray.map(_.toString).filter(_.contains("LeftAnti"))
+    spark.listenerManager.register(listener)
+    graft.kernel.Extract.mediaCalls.set(0L)
+    try {
+      withConf(HugeInput)(Runner.run(spark, docs, media, outDir, "run-2"))
+      // the listener is called on the listener bus: wait for the resume's write
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (resumePlans.isEmpty && System.nanoTime() < deadline) Thread.sleep(10)
+    } finally spark.listenerManager.unregister(listener)
+    assert(resumePlans.nonEmpty, "the resume's plan was not seen")
+    assert(!resumePlans.exists(_.contains("LeftSemi")), "the gate must be dropped above its cap")
+    // without the gate, each media row is extracted exactly once
+    assert(graft.kernel.Extract.mediaCalls.get() == media.count())
+    val all = IcebergLite.readAll(spark, Runner.extractedDir(outDir)).get
+    assert(all.count() == 400 && all.select("doc_id").distinct().count() == 400)
+    assert(goldenMismatches(all) == 0)
+  }
+
+  test("payload bytes cross no exchange, with the media gate off and on") {
+    import org.apache.spark.sql.catalyst.expressions.ExprId
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, Exchange}
+    import org.apache.spark.sql.types._
+    def binary(t: DataType): Boolean = t match {
+      case BinaryType => true
+      case s: StructType => s.fields.exists(f => binary(f.dataType))
+      case a: ArrayType => binary(a.elementType)
+      case m: MapType => binary(m.keyType) || binary(m.valueType)
+      case _ => false
+    }
+    // a partial aggregate's buffer is binary: it serializes the
+    // collect_list of extracted spans (text, no payload bytes)
+    def buffers(e: Exchange) = e.child match {
+      case agg: BaseAggregateExec =>
+        agg.aggregateExpressions.flatMap(_.aggregateFunction.inputAggBufferAttributes)
+          .map(_.exprId).toSet
+      case _ => Set.empty[ExprId]
+    }
+    val docs = Gen.readDocs(spark, corpusDir)
+    val media = Gen.readMedia(spark, corpusDir)
+    for (gate <- Seq(false, true)) {
+      // without AQE the executed plan is the whole plan, every exchange in it
+      val plan = withConf("spark.sql.adaptive.enabled" -> "false") {
+        Pipeline.extract(spark, docs, media, gateMedia = gate).queryExecution.executedPlan
+      }
+      val exchanges = plan.collect { case e: Exchange => e }
+      assert(exchanges.nonEmpty)
+      assert(exchanges.exists(_.isInstanceOf[BroadcastExchangeExec]) == gate, plan.toString)
+      val payload = exchanges.filter(e => e.output.exists(a => !buffers(e)(a.exprId) &&
+        (a.name == "bytes_b64" || binary(a.dataType))))
+      assert(payload.isEmpty, s"gate=$gate: payload bytes in ${payload.mkString("\n")}")
+    }
+  }
+
+  test("metadata key order does not depend on the JVM default locale") {
+    val parts = Array(SpanExtract("doc-tr", 0, "media", Seq.empty, "m-1", "image/jpeg",
+      Seq(MetaEntry("Software", "x"), MetaEntry("Image Width", "8")), "", 3L))
+    val default = java.util.Locale.getDefault
+    val keys = try {
+      java.util.Locale.setDefault(new java.util.Locale("tr", "TR"))
+      Pipeline.assembleDoc("doc-tr", parts).metadata.map(_.key)
+    } finally java.util.Locale.setDefault(default)
+    assert(keys == Seq("Content-Type", "Image Width", "rika:data-source", "rika:language",
+      "Software"))
   }
 
   test("table reads are planned from manifests: building them submits no Spark job") {

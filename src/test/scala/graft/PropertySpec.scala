@@ -50,8 +50,9 @@ object PropertySpec extends Properties("graft.kernel") {
 
   property("metadata key sort idempotent + case-insensitive") =
     forAll(SGen.listOf(SGen.alphaNumStr)) { keys =>
-      val sorted = keys.sortBy(k => (k.toLowerCase, k))
-      sorted.sortBy(k => (k.toLowerCase, k)) == sorted &&
+      def sort(ks: Seq[String]) = Extract.sortedByKey(ks.map(_ -> "")).map(_._1)
+      val sorted = sort(keys)
+      sort(sorted) == sorted &&
         sorted.map(_.toLowerCase) == sorted.map(_.toLowerCase).sorted
     }
 
