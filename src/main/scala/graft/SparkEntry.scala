@@ -4,7 +4,7 @@ import java.io.File
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.corpus.Gen
-import graft.operators.{Ann, Curation, Dedup, Multimodal, TextOps}
+import graft.operators.{Ann, Curation, Dedup, ImageOps, Multimodal, TextOps}
 import graft.spark.{IcebergLite, Pipeline, Runner}
 
 /** Driver contract — see SURVEY.md §7.
@@ -27,22 +27,14 @@ object SparkEntry {
     */
   val DataRoot = new File("data").getAbsolutePath
 
-  private def nDocsFor(sfName: String): Long = sfName match {
-    case "sf0.001" => 500L
-    case "sf0.01"  => 5000L
-    case "sf0.1"   => 50000L
-    case _         => 1000L
-  }
-
   /** Generate (once) and extract (once) the interleaved corpus for an sf
     * dir; returns the extracted table. Cached on disk — deterministic, so
     * rows-only checks are stable across runs.
     */
   def ensureExtracted(spark: SparkSession, sfDir: String): DataFrame = {
     val name = new File(sfDir).getName
-    val corpusDir = s"$DataRoot/corpus/$name"
+    val corpusDir = corpus(spark, sfDir)
     val outDir = s"$DataRoot/out/$name"
-    Gen.writeCorpus(spark, corpusDir, nDocsFor(name))
     if (IcebergLite.currentSnapshot(Runner.extractedDir(outDir)) < 0) {
       Runner.run(spark, Gen.readDocs(spark, corpusDir),
         Gen.readMedia(spark, corpusDir), outDir, runId = s"verify-$name")
@@ -50,35 +42,47 @@ object SparkEntry {
     IcebergLite.readAll(spark, Runner.extractedDir(outDir)).get
   }
 
-  def corpusMedia(spark: SparkSession, sfDir: String): DataFrame = {
+  def corpusMedia(spark: SparkSession, sfDir: String): DataFrame =
+    Gen.readMedia(spark, corpus(spark, sfDir))
+
+  /** The sf dir's interleaved corpus (Bench.benchDocs docs), written once. */
+  private def corpus(spark: SparkSession, sfDir: String): String = {
     val name = new File(sfDir).getName
-    Gen.writeCorpus(spark, s"$DataRoot/corpus/$name", nDocsFor(name))
-    Gen.readMedia(spark, s"$DataRoot/corpus/$name")
+    val dir = s"$DataRoot/corpus/$name"
+    Gen.writeCorpus(spark, dir, Bench.benchDocs(name))
+    dir
   }
 
   private def t(spark: SparkSession, dir: String, name: String): DataFrame =
     spark.read.parquet(s"$dir/$name.parquet")
 
-  /** documents with synthetic duplicates planted (doc_id < 50 duplicated
-    * with shifted ids) so dedup operators have real work.
-    */
-  private[graft] def docsWithDups(spark: SparkSession, dir: String): DataFrame = {
-    val d = t(spark, dir, "documents")
-    d.select(col("doc_id"), col("text"))
-      .unionAll(d.filter(col("doc_id") < 50)
-        .select((col("doc_id") + 100000).as("doc_id"), col("text")))
-  }
+  // Planted duplicates and the ANN query set; the query builders and the
+  // oracles below render the same values.
+  private val PlantedDocs = 50   // doc_id < PlantedDocs get a copy
+  private val PlantedVecs = 30   // vec_id < PlantedVecs get a copy
+  private val PlantOffset = 100000 // a copy's id is its original's + PlantOffset
+  private val AnnQueries = 16    // vec_id < AnnQueries are the ANN queries
 
-  /** embeddings with synthetic near-dup structure planted (vec_id < 30
-    * duplicated with shifted ids) so bucketed embedding-dedup/ANN have
+  /** `df`'s (id, payload) rows plus a copy of each row with id < n, at
+    * id + PlantOffset.
+    */
+  private def withCopies(df: DataFrame, id: String, payload: String, n: Int): DataFrame =
+    df.select(col(id), col(payload))
+      .unionAll(df.filter(col(id) < n).select((col(id) + PlantOffset).as(id), col(payload)))
+
+  /** documents with planted exact duplicates, so dedup operators have
+    * real work.
+    */
+  private[graft] def docsWithDups(spark: SparkSession, dir: String): DataFrame =
+    withCopies(t(spark, dir, "documents"), "doc_id", "text", PlantedDocs)
+
+  /** embeddings with planted copies, so bucketed embedding-dedup/ANN have
     * true near neighbors to find (the natural table is ~isotropic noise).
     */
-  private[graft] def embWithDups(spark: SparkSession, dir: String): DataFrame = {
-    val e = t(spark, dir, "embeddings")
-    e.select(col("vec_id"), col("embedding"))
-      .unionAll(e.filter(col("vec_id") < 30)
-        .select((col("vec_id") + 100000).as("vec_id"), col("embedding")))
-  }
+  private[graft] def embWithDups(spark: SparkSession, dir: String): DataFrame =
+    withCopies(t(spark, dir, "embeddings"), "vec_id", "embedding", PlantedVecs)
+
+  private def annQueries(emb: DataFrame): DataFrame = emb.filter(col("vec_id") < AnnQueries)
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame = {
@@ -165,11 +169,9 @@ object SparkEntry {
       // E8 truncation as a pipeline option (computation pruning analog of
       // lib/rika/cli/rika_command.rb:233-237); prefix invariant asserted in
       // ScalaTest, here the operator runs at maxContentLength=64
-      val name = new File(dir).getName
-      val corpusDir = s"$DataRoot/corpus/$name"
-      graft.corpus.Gen.writeCorpus(s, corpusDir, nDocsFor(name))
-      val docs = graft.corpus.Gen.readDocs(s, corpusDir).limit(300)
-      val media = graft.corpus.Gen.readMedia(s, corpusDir)
+      val corpusDir = corpus(s, dir)
+      val docs = Gen.readDocs(s, corpusDir).limit(300)
+      val media = Gen.readMedia(s, corpusDir)
       Pipeline.extract(s, docs, media, maxContentLength = 64)
         .toDF()
         .select(col("doc_id"),
@@ -202,13 +204,12 @@ object SparkEntry {
       // content-level near-dup images: real pixel decode -> aHash ->
       // banded Hamming join; catches the corpus's planted re-encodes
       // (same plane, different PNG filters) that byte dedup misses
-      graft.operators.ImageOps.dupImages(s, corpusMedia(s, dir))),
+      ImageOps.dupImages(s, corpusMedia(s, dir), perceptual = false)),
     "x_image_dups_xcodec" -> ((s, dir) =>
       // perceptual (DCT pHash) near-dups: pairs the corpus's planted
       // smooth planes stored as lossless PNG in one doc and lossy JPEG
       // q90 in another — content-level dedup across codecs
-      graft.operators.ImageOps.dupImages(s, corpusMedia(s, dir),
-        maxHamming = 12, blocks = 8, perceptual = true)),
+      ImageOps.dupImages(s, corpusMedia(s, dir), perceptual = true)),
     "x_audio_features" -> ((s, dir) =>
       // real PCM decode (kernel/PixelDecode.WavDecoder): round floats so
       // driver canonicalization is platform-stable
@@ -400,60 +401,56 @@ object SparkEntry {
     "dedup_exact" -> ((s, dir) => Dedup.exact(docsWithDups(s, dir))),
     // the verified pairs are shared with the two cluster queries below
     // through a persist that CacheManager matches by plan
-    "dedup_minhash_lsh" -> ((s, dir) => Dedup.minhashLshCached(docsWithDups(s, dir), 0.5)),
+    "dedup_minhash_lsh" -> ((s, dir) => Dedup.minhashLshCached(docsWithDups(s, dir))),
     "dedup_simhash" -> ((s, dir) => Dedup.simhash(t(s, dir, "documents"))),
     "dedup_simhash_pairs" -> ((s, dir) => Dedup.simhashPairs(docsWithDups(s, dir))),
-    "dedup_jaccard" -> ((s, dir) => Dedup.ngramJaccard(docsWithDups(s, dir), 0.5)),
+    "dedup_jaccard" -> ((s, dir) => Dedup.ngramJaccard(docsWithDups(s, dir))),
     // shipped path: LSH-gated (no crossJoin in the plan); the all-pairs
     // exact version is kept as its own oracled query
-    "dedup_embed_cosine" -> ((s, dir) => Dedup.embedCosineGated(embWithDups(s, dir), 0.4)),
-    "dedup_embed_exact" -> ((s, dir) => Dedup.embedCosineExact(t(s, dir, "embeddings"), 0.4)),
+    "dedup_embed_cosine" -> ((s, dir) => Dedup.embedCosineGated(embWithDups(s, dir))),
+    "dedup_embed_exact" -> ((s, dir) => Dedup.embedCosineExact(t(s, dir, "embeddings"))),
 
     // ---- similarity search (all oracled: brute force exactly, the
     // bucketed variants via deterministic-gate mirroring in DuckDB)
     "ann_topk" -> ((s, dir) => {
       val e = t(s, dir, "embeddings")
-      Ann.bruteTopK(e, e.filter(col("vec_id") < 16), k = 10)
+      Ann.bruteTopK(e, annQueries(e))
     }),
     "ann_ivf" -> ((s, dir) => {
       val e = t(s, dir, "embeddings")
-      Ann.ivfTopK(e, e.filter(col("vec_id") < 16), k = 10)
+      Ann.ivfTopK(e, annQueries(e))
     }),
-    "ann_lsh" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      Ann.lshTopK(embWithDups(s, dir), e.filter(col("vec_id") < 16), k = 10)
-    }),
+    "ann_lsh" -> ((s, dir) =>
+      Ann.lshTopK(embWithDups(s, dir), annQueries(t(s, dir, "embeddings")))),
 
     // ---- corpus curation (oracled)
-    "curate_sample" -> ((s, dir) =>
-      Curation.stratifiedSample(t(s, dir, "documents"), "lang",
-        Map("en" -> 0.5, "de" -> 0.25, "zh" -> 0.1), defaultRate = 0.05)),
+    "curate_sample" -> ((s, dir) => Curation.stratifiedSample(t(s, dir, "documents"))),
     "curate_filter" -> ((s, dir) =>
       Curation.filterPipeline(docsWithDups(s, dir))),
     "dedup_clusters" -> ((s, dir) =>
-      Curation.dupClusters(Dedup.minhashLshCached(docsWithDups(s, dir), 0.5))),
+      Curation.dupClusters(Dedup.minhashLshCached(docsWithDups(s, dir)))),
     // fixpoint mode (connected components): converges for ANY diameter;
     // oracled via a DuckDB recursive-CTE transitive closure
     "dedup_clusters_fix" -> ((s, dir) =>
-      Curation.dupClustersFixpoint(Dedup.minhashLshCached(docsWithDups(s, dir), 0.5))),
+      Curation.dupClustersFixpoint(Dedup.minhashLshCached(docsWithDups(s, dir)))),
 
     // ---- text analysis (oracled except langid)
     "text_quality" -> ((s, dir) => TextOps.quality(t(s, dir, "documents"))),
     "text_tokens" -> ((s, dir) => TextOps.tokenCounts(t(s, dir, "documents"))),
     "text_fingerprint" -> ((s, dir) => TextOps.fingerprint(t(s, dir, "documents"))),
-    "text_langid" -> ((s, dir) => TextOps.langId(s, t(s, dir, "documents")))
+    "text_langid" -> ((s, dir) => TextOps.langId(t(s, dir, "documents")))
   )
 
   // ----------------------------------------------------------- oracles
-  import Dedup.{Bands, HashA, HashB, NumHashes, P, RowsPerBand}
+  import Dedup.{Bands, HashA, HashB, NumHashes, P, RowsPerBand, Shingle}
 
   private val h64 = "CAST(('0x' || substr(md5(%s),1,15)) AS BIGINT)"
   private def H(e: String) = h64.format(e)
 
-  private val shingles3 =
-    """toks AS (SELECT doc_id, string_split(lower(text), ' ') AS t FROM docs),
-      |idx AS (SELECT doc_id, t, unnest(generate_series(1, greatest(len(t)-2, 1))) AS j FROM toks),
-      |sh AS (SELECT doc_id, array_to_string(t[j:j+2], ' ') AS sh FROM idx)""".stripMargin
+  private val shingleCte =
+    s"""toks AS (SELECT doc_id, string_split(lower(text), ' ') AS t FROM docs),
+      |idx AS (SELECT doc_id, t, unnest(generate_series(1, greatest(len(t)-${Shingle - 1}, 1))) AS j FROM toks),
+      |sh AS (SELECT doc_id, array_to_string(t[j:j+${Shingle - 1}], ' ') AS sh FROM idx)""".stripMargin
 
   /** Double-precision cosine in DuckDB matching Spark's sequential fold
     * bit-for-bit (verified empirically: list_sum/list_transform fold left
@@ -464,25 +461,27 @@ object SparkEntry {
        | / (sqrt(list_sum(list_transform($a, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
        |   * sqrt(list_sum(list_transform($b, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))))""".stripMargin
 
-  private val dupDocs =
-    """docs AS (SELECT doc_id, text FROM documents
-      |UNION ALL SELECT doc_id + 100000, text FROM documents WHERE doc_id < 50)""".stripMargin
+  /** Mirror of withCopies as a CTE named `name`. */
+  private def copiesCte(name: String, table: String, id: String, payload: String, n: Int) =
+    s"""$name AS (SELECT $id, $payload FROM $table
+      |UNION ALL SELECT $id + $PlantOffset, $payload FROM $table WHERE $id < $n)""".stripMargin
+  private val dupDocs = copiesCte("docs", "documents", "doc_id", "text", PlantedDocs)
+  private val dupEmb = copiesCte("emb", "embeddings", "vec_id", "embedding", PlantedVecs)
 
-  private val dupEmb =
-    """emb AS (SELECT vec_id, embedding FROM embeddings
-      |UNION ALL SELECT vec_id + 100000, embedding FROM embeddings WHERE vec_id < 30)""".stripMargin
+  private val annQ =
+    s"q AS (SELECT vec_id AS qid, embedding AS qv FROM embeddings WHERE vec_id < $AnnQueries)"
 
   /** The deterministic hyperplane sign matrix (Ann.hyperSign) as a DuckDB
     * VALUES table (tbl, bit, sv DOUBLE[]) — renders the exact same ±1
     * vectors the Spark expressions use, so LSH signatures are bit-equal
-    * cross-engine.
+    * cross-engine. 64 is the embeddings table's dimensionality (Spark
+    * reads it with Ann.dimsOf).
     */
-  private def signsCte(nTables: Int = 8, nBits: Int = 16, dims: Int = 64,
-      seed: Long = 42L): String = {
-    val rows = (0 until nTables).flatMap { tb =>
-      (0 until nBits).map { b =>
-        val lst = Ann.signRow(seed, tb, b, dims)
-          .map(s => if (s > 0) "1" else "-1").mkString(",")
+  private def signsCte: String = {
+    val rows = (0 until Ann.NTables).flatMap { tb =>
+      (0 until Ann.NBits).map { b =>
+        val lst = (0 until 64)
+          .map(d => if (Ann.hyperSign(Ann.Seed, tb, b, d) > 0) "1" else "-1").mkString(",")
         s"($tb,$b,[$lst]::DOUBLE[])"
       }
     }.mkString(", ")
@@ -506,7 +505,7 @@ object SparkEntry {
       val cols = (0 until RowsPerBand).map(r => s"m${b * RowsPerBand + r}").mkString(", ")
       s"SELECT doc_id, $b AS band, md5(concat_ws(',', $cols)) AS bkey FROM sig"
     }.mkString(" UNION ALL ")
-    s"""WITH $dupDocs, $shingles3,
+    s"""WITH $dupDocs, $shingleCte,
        |h AS (SELECT doc_id, ${H("sh")} % $P AS h FROM sh),
        |sig AS (SELECT doc_id, $ms FROM h GROUP BY doc_id),
        |bands AS ($bands),
@@ -522,15 +521,15 @@ object SparkEntry {
        |  round(CAST(coalesce(i.i,0) AS DOUBLE) / (ca.n + cb.n - coalesce(i.i,0)), 6) AS jaccard
        |FROM cand c LEFT JOIN inter i ON i.doc_a = c.doc_a AND i.doc_b = c.doc_b
        |JOIN cnt ca ON ca.doc_id = c.doc_a JOIN cnt cb ON cb.doc_id = c.doc_b
-       |WHERE round(CAST(coalesce(i.i,0) AS DOUBLE) / (ca.n + cb.n - coalesce(i.i,0)), 6) >= 0.5
+       |WHERE round(CAST(coalesce(i.i,0) AS DOUBLE) / (ca.n + cb.n - coalesce(i.i,0)), 6) >= ${Dedup.MinhashThreshold}
        |ORDER BY c.doc_a, c.doc_b""".stripMargin
   }
 
-  /** df cap mirrored from Dedup.ngramJaccard (default dfCap = 1024). */
+  /** Mirror of Dedup.ngramJaccard, hot-shingle cap included. */
   private def jaccardSql: String =
-    s"""WITH $dupDocs, $shingles3,
+    s"""WITH $dupDocs, $shingleCte,
        |shd0 AS (SELECT DISTINCT doc_id, sh FROM sh),
-       |rare AS (SELECT sh FROM shd0 GROUP BY sh HAVING count(*) <= 1024),
+       |rare AS (SELECT sh FROM shd0 GROUP BY sh HAVING count(*) <= ${Dedup.DfCap}),
        |shd AS (SELECT shd0.doc_id, shd0.sh FROM shd0 JOIN rare USING (sh)),
        |cnt AS (SELECT doc_id, count(*) AS n FROM shd GROUP BY doc_id),
        |inter AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS i
@@ -538,7 +537,7 @@ object SparkEntry {
        |SELECT doc_a, doc_b,
        |  round(CAST(i AS DOUBLE) / (ca.n + cb.n - i), 6) AS jaccard
        |FROM inter JOIN cnt ca ON ca.doc_id = doc_a JOIN cnt cb ON cb.doc_id = doc_b
-       |WHERE round(CAST(i AS DOUBLE) / (ca.n + cb.n - i), 6) >= 0.5
+       |WHERE round(CAST(i AS DOUBLE) / (ca.n + cb.n - i), 6) >= ${Dedup.JaccardThreshold}
        |ORDER BY doc_a, doc_b""".stripMargin
 
   /** SimHash signature CTEs over a docs relation: sim(doc_id, simhash). */
@@ -546,7 +545,7 @@ object SparkEntry {
     s"""tok AS (SELECT doc_id, unnest(string_split(lower(text), ' ')) AS t FROM $rel),
        |h AS (SELECT doc_id, ${H("t")} AS h FROM tok WHERE t <> ''),
        |bits AS (SELECT doc_id, b, sum(CASE WHEN (h >> b) & 1 = 1 THEN 1 ELSE -1 END) AS v
-       |  FROM h, generate_series(0, 59) s(b) GROUP BY 1, 2),
+       |  FROM h, generate_series(0, ${Dedup.SimhashBits - 1}) s(b) GROUP BY 1, 2),
        |sim AS (SELECT doc_id, CAST(sum(CASE WHEN v > 0 THEN (CAST(1 AS BIGINT) << b) ELSE 0 END) AS BIGINT) AS simhash
        |  FROM bits GROUP BY doc_id)""".stripMargin
 
@@ -554,46 +553,46 @@ object SparkEntry {
     s"""WITH ${simhashCte("documents")}
        |SELECT doc_id, simhash FROM sim ORDER BY doc_id""".stripMargin
 
-  /** Bit-block banding mirror of Dedup.simhashPairs (4 blocks x 15 bits,
-    * Hamming <= 3).
-    */
-  private def simhashPairsSql: String =
+  /** Bit-block banding mirror of Dedup.simhashPairs. */
+  private def simhashPairsSql: String = {
+    import Dedup.{SimhashBlockBits, SimhashBlockMask, SimhashBlocks, SimhashMaxHamming}
     s"""WITH $dupDocs, ${simhashCte("docs")},
-       |blk AS (SELECT doc_id, simhash, g.b AS bi, (simhash >> (g.b * 15)) & 32767 AS bv
-       |  FROM sim, generate_series(0, 3) g(b)),
+       |blk AS (SELECT doc_id, simhash, g.b AS bi, (simhash >> (g.b * $SimhashBlockBits)) & $SimhashBlockMask AS bv
+       |  FROM sim, generate_series(0, ${SimhashBlocks - 1}) g(b)),
        |cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
        |    a.simhash AS sa, b.simhash AS sb
        |  FROM blk a JOIN blk b ON a.bi = b.bi AND a.bv = b.bv AND a.doc_id < b.doc_id)
        |SELECT doc_a, doc_b, CAST(bit_count(xor(sa, sb)) AS INTEGER) AS hamming
-       |FROM cand WHERE bit_count(xor(sa, sb)) <= 3
+       |FROM cand WHERE bit_count(xor(sa, sb)) <= $SimhashMaxHamming
        |ORDER BY doc_a, doc_b""".stripMargin
+  }
 
   /** Mirror of Dedup.embedCosineGated over the planted-dup embeddings. */
   private def embedGatedSql: String =
     s"""WITH $dupEmb,
        |e AS (SELECT vec_id AS id, embedding AS v FROM emb),
-       |${signsCte()},
+       |$signsCte,
        |$lshSigCte,
        |cand AS (SELECT DISTINCT x.id AS id_a, y.id AS id_b
        |  FROM sig x JOIN sig y ON x.tbl = y.tbl AND x.sig = y.sig AND x.id < y.id)
        |SELECT id_a, id_b, round(${cosSql("a.v", "b.v")}, 4) AS cosine
        |FROM cand JOIN e a ON a.id = id_a JOIN e b ON b.id = id_b
-       |WHERE round(${cosSql("a.v", "b.v")}, 4) >= 0.4
+       |WHERE round(${cosSql("a.v", "b.v")}, 4) >= ${Dedup.CosineThreshold}
        |ORDER BY id_a, id_b""".stripMargin
 
-  /** Mirror of Ann.lshTopK (8 tables x 16 bits, 1-bit multiprobe) over the
-    * planted-dup corpus with queries vec_id < 16.
+  /** Mirror of Ann.lshTopK (1-bit multiprobe) over the planted-dup corpus
+    * with the ANN query set.
     */
   private def annLshSql: String =
     s"""WITH $dupEmb,
        |e AS (SELECT vec_id AS id, embedding AS v FROM emb),
-       |${signsCte()},
+       |$signsCte,
        |$lshSigCte,
-       |q AS (SELECT vec_id AS qid, embedding AS qv FROM embeddings WHERE vec_id < 16),
-       |qsig AS (SELECT id AS qid, tbl, sig FROM sig WHERE id < 16),
+       |$annQ,
+       |qsig AS (SELECT id AS qid, tbl, sig FROM sig WHERE id < $AnnQueries),
        |probes AS (SELECT qid, tbl, sig AS p FROM qsig
        |  UNION ALL SELECT qid, tbl, xor(sig, CAST(1 AS BIGINT) << g.b) AS p
-       |    FROM qsig, generate_series(0, 15) g(b)),
+       |    FROM qsig, generate_series(0, ${Ann.NBits - 1}) g(b)),
        |cand AS (SELECT DISTINCT p.qid, s.id FROM probes p
        |  JOIN sig s ON s.tbl = p.tbl AND s.sig = p.p AND s.id <> p.qid),
        |scored AS (SELECT c.qid, c.id, round(${cosSql("e.v", "q.qv")}, 6) AS cosine
@@ -602,21 +601,21 @@ object SparkEntry {
        |    row_number() OVER (PARTITION BY qid ORDER BY cosine DESC, id ASC) AS rank
        |  FROM scored)
        |SELECT qid AS query_id, CAST(rank AS INTEGER) AS rank, id AS neighbor_id, cosine
-       |FROM r WHERE rank <= 10 ORDER BY query_id, rank""".stripMargin
+       |FROM r WHERE rank <= ${Ann.TopK} ORDER BY query_id, rank""".stripMargin
 
-  /** Mirror of Ann.ivfTopK: centroids = first 16 ids, nProbe = 4. */
+  /** Mirror of Ann.ivfTopK: the centroids are the first NCentroids ids. */
   private def annIvfSql: String =
     s"""WITH e AS (SELECT vec_id AS id, embedding AS v FROM embeddings),
-       |cent AS (SELECT vec_id AS cid, embedding AS cv FROM embeddings ORDER BY vec_id LIMIT 16),
+       |cent AS (SELECT vec_id AS cid, embedding AS cv FROM embeddings ORDER BY vec_id LIMIT ${Ann.NCentroids}),
        |asgs AS (SELECT e.id, c.cid, ${cosSql("e.v", "c.cv")} AS cs FROM e CROSS JOIN cent c),
        |asg AS (SELECT id, cid FROM (SELECT id, cid,
        |    row_number() OVER (PARTITION BY id ORDER BY cs DESC, cid ASC) AS rn FROM asgs)
        |  WHERE rn = 1),
-       |q AS (SELECT vec_id AS qid, embedding AS qv FROM embeddings WHERE vec_id < 16),
+       |$annQ,
        |ps AS (SELECT q.qid, c.cid, ${cosSql("q.qv", "c.cv")} AS cs FROM q CROSS JOIN cent c),
        |probe AS (SELECT qid, cid FROM (SELECT qid, cid,
        |    row_number() OVER (PARTITION BY qid ORDER BY cs DESC, cid ASC) AS rn FROM ps)
-       |  WHERE rn <= 4),
+       |  WHERE rn <= ${Ann.NProbe}),
        |scored AS (SELECT p.qid, a.id, a.cid, round(${cosSql("e.v", "q.qv")}, 6) AS cosine
        |  FROM probe p JOIN asg a ON a.cid = p.cid
        |  JOIN e ON e.id = a.id JOIN q ON q.qid = p.qid
@@ -626,7 +625,7 @@ object SparkEntry {
        |  FROM scored)
        |SELECT qid AS query_id, CAST(rank AS INTEGER) AS rank, id AS neighbor_id,
        |  cosine, cid AS centroid_id
-       |FROM r WHERE rank <= 10 ORDER BY query_id, rank""".stripMargin
+       |FROM r WHERE rank <= ${Ann.TopK} ORDER BY query_id, rank""".stripMargin
 
   /** text_quality's feature pipeline over a docs relation -> q(doc_id,
     * n_chars, n_tokens, punct_ratio, stopword_ratio, mean_token_len,
@@ -649,23 +648,22 @@ object SparkEntry {
        |    * least(1.0, stopword_ratio * 5.0 + 0.5), 4) AS quality_score
        |FROM qfeat)""".stripMargin
 
-  /** 3 unrolled min-label-propagation rounds over the minhash-LSH pairs —
-    * mirrors Curation.dupClusters(iterations = 3).
+  /** Curation.Rounds unrolled min-label-propagation rounds over the
+    * minhash-LSH pairs — mirrors Curation.dupClusters' default.
     */
   private def dupClustersSql: String = {
-    def round(prev: String, out: String): String =
-      s"""$out AS (SELECT l.id, least(l.lbl, coalesce(m.nlbl, l.lbl)) AS lbl
-         |  FROM $prev l LEFT JOIN (
+    val rounds = (1 to Curation.Rounds).map { r =>
+      s"""lab$r AS (SELECT l.id, least(l.lbl, coalesce(m.nlbl, l.lbl)) AS lbl
+         |  FROM lab${r - 1} l LEFT JOIN (
          |    SELECT e.src, min(x.lbl) AS nlbl FROM edges e
-         |    JOIN $prev x ON x.id = e.dst GROUP BY e.src) m ON m.src = l.id)""".stripMargin
+         |    JOIN lab${r - 1} x ON x.id = e.dst GROUP BY e.src) m ON m.src = l.id)""".stripMargin
+    }.mkString(",\n")
     s"""WITH pr AS (SELECT * FROM ($minhashLshSql)),
        |edges AS (SELECT doc_a AS src, doc_b AS dst FROM pr
        |  UNION ALL SELECT doc_b AS src, doc_a AS dst FROM pr),
        |lab0 AS (SELECT DISTINCT src AS id, src AS lbl FROM edges),
-       |${round("lab0", "lab1")},
-       |${round("lab1", "lab2")},
-       |${round("lab2", "lab3")}
-       |SELECT id AS doc_id, lbl AS cluster_rep FROM lab3 ORDER BY doc_id""".stripMargin
+       |$rounds
+       |SELECT id AS doc_id, lbl AS cluster_rep FROM lab${Curation.Rounds} ORDER BY doc_id""".stripMargin
   }
 
   /** Connected components as a DuckDB recursive transitive closure: the
@@ -682,6 +680,19 @@ object SparkEntry {
        |  SELECT e.src, reach.r FROM edges e JOIN reach ON reach.id = e.dst)
        |SELECT id AS doc_id, min(r) AS cluster_rep FROM reach
        |GROUP BY id ORDER BY doc_id""".stripMargin
+
+  /** Mirror of Curation.stratifiedSample (CASE arms two to a line). */
+  private def curateSampleSql: String = {
+    import Curation.{Buckets, DefaultRate, Rates, Strata}
+    val arms = Rates.map { case (k, v) => s"WHEN '$k' THEN $v" }
+      .grouped(2).map(_.mkString(" ")).mkString("\n  ")
+    s"""SELECT doc_id, $Strata, bucket FROM (
+       |  SELECT doc_id, $Strata,
+       |    CAST(('0x' || substr(md5($Strata || ':' || CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT) % $Buckets AS bucket
+       |  FROM documents)
+       |WHERE bucket < CAST(trunc((CASE $Strata $arms ELSE $DefaultRate END) * ${Buckets.toDouble}) AS BIGINT)
+       |ORDER BY doc_id""".stripMargin
+  }
 
   def oracleSql: Map[String, String] = Map(
     "q1_agg" ->
@@ -813,12 +824,12 @@ object SparkEntry {
       s"""WITH scored AS (SELECT a.vec_id AS id_a, b.vec_id AS id_b,
          |  round(${cosSql("a.embedding", "b.embedding")}, 4) AS cosine
          |FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id)
-         |SELECT id_a, id_b, cosine FROM scored WHERE cosine >= 0.4
+         |SELECT id_a, id_b, cosine FROM scored WHERE cosine >= ${Dedup.CosineThreshold}
          |ORDER BY id_a, id_b""".stripMargin,
     "ann_lsh" -> annLshSql,
     "ann_ivf" -> annIvfSql,
     "ann_topk" ->
-      s"""WITH q AS (SELECT vec_id AS qid, embedding AS qv FROM embeddings WHERE vec_id < 16),
+      s"""WITH $annQ,
          |scored AS (SELECT q.qid, e.vec_id AS id,
          |    round(${cosSql("e.embedding", "q.qv")}, 6) AS cosine
          |  FROM embeddings e, q WHERE e.vec_id <> q.qid),
@@ -826,28 +837,21 @@ object SparkEntry {
          |    row_number() OVER (PARTITION BY qid ORDER BY cosine DESC, id ASC) AS rank
          |  FROM scored)
          |SELECT qid AS query_id, rank, id AS neighbor_id, cosine
-         |FROM r WHERE rank <= 10 ORDER BY query_id, rank""".stripMargin,
+         |FROM r WHERE rank <= ${Ann.TopK} ORDER BY query_id, rank""".stripMargin,
     "text_quality" ->
       s"""WITH ${qualityCte("documents")}
         |SELECT doc_id, n_chars, n_tokens, punct_ratio, stopword_ratio, mean_token_len,
         |  quality_score
         |FROM q ORDER BY doc_id""".stripMargin,
-    "curate_sample" ->
-      """SELECT doc_id, lang, bucket FROM (
-        |  SELECT doc_id, lang,
-        |    CAST(('0x' || substr(md5(lang || ':' || CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT) % 1000000 AS bucket
-        |  FROM documents)
-        |WHERE bucket < CAST(trunc((CASE lang WHEN 'en' THEN 0.5 WHEN 'de' THEN 0.25
-        |  WHEN 'zh' THEN 0.1 ELSE 0.05 END) * 1000000.0) AS BIGINT)
-        |ORDER BY doc_id""".stripMargin,
+    "curate_sample" -> curateSampleSql,
     "curate_filter" ->
       s"""WITH $dupDocs, ${qualityCte("docs")},
         |canon AS (SELECT md5(text) AS h, min(doc_id) AS canonical FROM docs GROUP BY 1),
         |j AS (SELECT q.doc_id, q.n_tokens, q.quality_score, c.canonical,
         |    CASE WHEN q.doc_id <> c.canonical THEN 'duplicate'
-        |      WHEN q.n_tokens < 20 THEN 'too_short'
-        |      WHEN q.n_tokens > 100000 THEN 'too_long'
-        |      WHEN q.quality_score < 0.3 THEN 'low_quality'
+        |      WHEN q.n_tokens < ${Curation.MinTokens} THEN 'too_short'
+        |      WHEN q.n_tokens > ${Curation.MaxTokens} THEN 'too_long'
+        |      WHEN q.quality_score < ${Curation.MinQuality} THEN 'low_quality'
         |      ELSE '' END AS reason
         |  FROM q JOIN docs d ON d.doc_id = q.doc_id
         |  JOIN canon c ON c.h = md5(d.text))

@@ -3,7 +3,7 @@ package graft.corpus
 import java.io.ByteArrayOutputStream
 import java.nio.charset.StandardCharsets
 import java.time.LocalDateTime
-import java.util.SplittableRandom
+import java.util.{Locale, SplittableRandom}
 import java.util.zip.{GZIPOutputStream, ZipEntry, ZipOutputStream}
 
 /** Round-3 corpus writers: RFC-822 email, zip/tar.gz archive bundles, and
@@ -489,7 +489,7 @@ object SubtextGen {
   }
 
   private def word(rng: SplittableRandom, lang: String): String =
-    TextGen.titleLine(rng, lang).split(" ")(0).toLowerCase
+    TextGen.titleLine(rng, lang).split(" ")(0).toLowerCase(Locale.ROOT)
 
   private def csv(rng: SplittableRandom, lang: String, sep: Char): Piece = {
     val nCols = 2 + rng.nextInt(4)

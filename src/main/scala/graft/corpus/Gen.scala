@@ -1,6 +1,6 @@
 package graft.corpus
 
-import java.util.SplittableRandom
+import java.util.{Locale, SplittableRandom}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import graft.spark.{DocRow, IcebergLite, MediaRow, Span}
 import graft.kernel.Extract
@@ -804,7 +804,7 @@ object Gen {
   }
 
   private def emlPiece(rng: SplittableRandom, lang: String, docId: String, k: Int): Piece = {
-    val user = TextGen.titleLine(rng, "en").split(" ")(0).toLowerCase
+    val user = TextGen.titleLine(rng, "en").split(" ")(0).toLowerCase(Locale.ROOT)
     val spec = EmlWriter.Spec(
       subject = TextGen.titleLine(rng, lang),
       from = s"$user@example.org",
@@ -861,7 +861,7 @@ object Gen {
   }
 
   private def msgPiece(rng: SplittableRandom, lang: String, docId: String, k: Int): Piece = {
-    val user = TextGen.titleLine(rng, "en").split(" ")(0).toLowerCase
+    val user = TextGen.titleLine(rng, "en").split(" ")(0).toLowerCase(Locale.ROOT)
     val spec = MsgWriter.Spec(
       subject = TextGen.titleLine(rng, lang),
       sender = s"$user@example.org",

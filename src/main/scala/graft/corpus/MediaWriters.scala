@@ -2,6 +2,7 @@ package graft.corpus
 
 import java.io.ByteArrayOutputStream
 import java.nio.charset.StandardCharsets
+import java.util.Locale
 
 /** Deterministic media-container writers (WAV / MP4 / BMP / WebP-VP8L)
   * with analytically-known metadata, for the multimodal typed-metadata
@@ -589,7 +590,7 @@ object MkvWriter {
     if (spec.durationMs > 0) {
       val units = if (spec.floatWidth == 4) spec.durationMs.toFloat.toDouble
       else spec.durationMs
-      m += ("xmpDM:duration" -> f"${units * spec.timestampScale / 1e9}%.3f")
+      m += ("xmpDM:duration" -> "%.3f".formatLocal(Locale.ROOT, units * spec.timestampScale / 1e9))
     }
     spec.video.foreach { case (w, h, codec) =>
       m ++= Map("Image Width" -> s"$w pixels", "Image Height" -> s"$h pixels",
@@ -607,7 +608,7 @@ object MkvWriter {
         java.time.Instant.ofEpochMilli(spec.dateUtcMs).toString
           .replace(".000Z", "Z"))
     spec.tags.foreach { case (k, v) =>
-      val mapped = k.toUpperCase match {
+      val mapped = k.toUpperCase(Locale.ROOT) match {
         case "TITLE"  => "dc:title"
         case "ARTIST" => "xmpDM:artist"
         case "GENRE"  => "xmpDM:genre"

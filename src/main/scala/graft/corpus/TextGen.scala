@@ -1,6 +1,6 @@
 package graft.corpus
 
-import java.util.SplittableRandom
+import java.util.{Locale, SplittableRandom}
 
 /** Deterministic per-language text generator. Word pools are weighted so
   * the Lang kernel's function-word evidence fires reliably (mirroring real
@@ -188,7 +188,7 @@ object TextGen {
       else content(rng.nextInt(content.size))
     }
     val s = words.mkString(" ")
-    s.substring(0, 1).toUpperCase + s.substring(1) + "."
+    s.substring(0, 1).toUpperCase(Locale.ROOT) + s.substring(1) + "."
   }
 
   /** One paragraph of `sentences` sentences. */
@@ -201,7 +201,7 @@ object TextGen {
     val n = 3 + rng.nextInt(4)
     (0 until n).map { k =>
       val w = if (k % 2 == 0) content(rng.nextInt(content.size)) else fn(rng.nextInt(fn.size))
-      w.substring(0, 1).toUpperCase + w.substring(1)
+      w.substring(0, 1).toUpperCase(Locale.ROOT) + w.substring(1)
     }.mkString(" ")
   }
 

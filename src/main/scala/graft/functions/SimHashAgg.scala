@@ -22,7 +22,7 @@ case class SimHashAgg(
     inputAggBufferOffset: Int = 0)
   extends TypedImperativeAggregate[Array[Int]] {
 
-  private val Bits = 60
+  private val Bits = graft.operators.Dedup.SimhashBits
 
   override def createAggregationBuffer(): Array[Int] = new Array[Int](Bits)
 

@@ -172,7 +172,7 @@ package functions {
       */
     def minhashSig(text: UTF8String): org.apache.spark.sql.catalyst.util.ArrayData = {
       val mins = Array.fill(MinHashA.length)(Long.MaxValue)
-      val sh = shingleArray(text, 3)
+      val sh = shingleArray(text, graft.operators.Dedup.Shingle)
       var j = 0
       while (j < sh.length) {
         val h = h64(sh(j)) % MinHashP

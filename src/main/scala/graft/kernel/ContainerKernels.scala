@@ -1,6 +1,7 @@
 package graft.kernel
 
 import java.io.ByteArrayInputStream
+import java.util.Locale
 import javax.xml.stream.XMLStreamConstants
 
 /** Round-3 container + message kernels: archive recursion (zip/tar/gzip),
@@ -188,7 +189,7 @@ object EmlKernel {
 
     val ct = headers.getOrElse("content-type", "text/plain")
     val text =
-      if (ct.toLowerCase.startsWith("multipart/")) {
+      if (ct.toLowerCase(Locale.ROOT).startsWith("multipart/")) {
         param(ct, "boundary") match {
           case Some(b) =>
             val (t, attachments) = multipartText(body, b, unicodeInput)
@@ -224,7 +225,7 @@ object EmlKernel {
       val disp = hs.getOrElse("content-disposition", "")
       val fname = param(disp, "filename")
         .orElse(param(hs.getOrElse("content-type", ""), "name"))
-      val isAttachment = disp.trim.toLowerCase.startsWith("attachment") ||
+      val isAttachment = disp.trim.toLowerCase(Locale.ROOT).startsWith("attachment") ||
         fname.isDefined
       (hs.getOrElse("content-type", "text/plain"), hs, pb, isAttachment, fname)
     }
@@ -238,9 +239,9 @@ object EmlKernel {
     // first text/* part rather than leaking the raw multipart body —
     // base64 payloads and MIME headers must never surface as content
     // (ADVICE r5)
-    val text = textParts.find(_._1.toLowerCase.startsWith("text/plain"))
+    val text = textParts.find(_._1.toLowerCase(Locale.ROOT).startsWith("text/plain"))
       .orElse(textParts.headOption)
-      .orElse(parts.find(_._1.toLowerCase.startsWith("text/")))
+      .orElse(parts.find(_._1.toLowerCase(Locale.ROOT).startsWith("text/")))
       .map { case (_, hs, pb, _, _) => decodeBody(pb, hs, unicodeInput) }
       .getOrElse("")
     (text, attachments)
@@ -248,7 +249,7 @@ object EmlKernel {
 
   private def decodeBody(body: String, headers: Map[String, String],
       unicodeInput: Boolean): String = {
-    val enc = headers.getOrElse("content-transfer-encoding", "7bit").trim.toLowerCase
+    val enc = headers.getOrElse("content-transfer-encoding", "7bit").trim.toLowerCase(Locale.ROOT)
     val csName = headers.get("content-type").flatMap(param(_, "charset"))
     val decoded = enc match {
       case "base64" =>
@@ -271,7 +272,7 @@ object EmlKernel {
     * `multipart/mixed; boundary="b"` -> param(v, "boundary") = Some(b).
     */
   private def param(headerValue: String, name: String): Option[String] = {
-    val i = headerValue.toLowerCase.indexOf(name.toLowerCase + "=")
+    val i = headerValue.toLowerCase(Locale.ROOT).indexOf(name.toLowerCase(Locale.ROOT) + "=")
     if (i < 0) return None
     val start = i + name.length + 1
     if (start >= headerValue.length) None
@@ -314,7 +315,7 @@ object EmlKernel {
     re.replaceAllIn(v, m => {
       val cs = try java.nio.charset.Charset.forName(m.group(1))
         catch { case _: Exception => java.nio.charset.StandardCharsets.UTF_8 }
-      val data = m.group(2).toLowerCase match {
+      val data = m.group(2).toLowerCase(Locale.ROOT) match {
         case "b" =>
           try java.util.Base64.getMimeDecoder.decode(m.group(3))
           catch { case _: IllegalArgumentException => Array.emptyByteArray }
@@ -339,7 +340,7 @@ object EmlKernel {
       } else {
         flush()
         val c = line.indexOf(':')
-        if (c > 0) { name = line.substring(0, c).trim.toLowerCase; sb.append(line.substring(c + 1)) }
+        if (c > 0) { name = line.substring(0, c).trim.toLowerCase(Locale.ROOT); sb.append(line.substring(c + 1)) }
       }
     }
     flush()

@@ -132,7 +132,7 @@ object HtmlKernel {
             val inner = html.substring(i + 1, e)
             val closing = inner.startsWith("/")
             val rawName = (if (closing) inner.drop(1) else inner)
-              .takeWhile(ch => ch.isLetterOrDigit).toLowerCase
+              .takeWhile(ch => ch.isLetterOrDigit).toLowerCase(java.util.Locale.ROOT)
             val selfClosed = inner.endsWith("/")
             if (rawName.nonEmpty) {
               if (dropTags.contains(rawName)) {

@@ -168,11 +168,11 @@ object JpegKernel {
       }
       lat.foreach { v =>
         val sign = if (latRef == "S") -1 else 1
-        meta += ("GPS Latitude" -> f"${sign * v}%.6f")
+        meta += ("GPS Latitude" -> "%.6f".formatLocal(java.util.Locale.ROOT, sign * v))
       }
       lon.foreach { v =>
         val sign = if (lonRef == "W") -1 else 1
-        meta += ("GPS Longitude" -> f"${sign * v}%.6f")
+        meta += ("GPS Longitude" -> "%.6f".formatLocal(java.util.Locale.ROOT, sign * v))
       }
     }
 

@@ -422,7 +422,7 @@ object Lang {
     if (sinh.toDouble / letters > 0.3) return "si"
     if (mymr.toDouble / letters > 0.3) return "my"
 
-    val tokens = TokenSplit.split(t.toLowerCase).filter(_.nonEmpty)
+    val tokens = TokenSplit.split(t.toLowerCase(java.util.Locale.ROOT)).filter(_.nonEmpty)
     if (tokens.isEmpty) return Undetermined
 
     // single pass over tokens and text via the inverted tables — the

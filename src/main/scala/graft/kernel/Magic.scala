@@ -232,8 +232,8 @@ object Magic {
       if (line.isEmpty) checked = 12 // header block ended
       else {
         val c = line.indexOf(':')
-        if (c > 0 && c <= 32 && EmlHeaders.contains(line.substring(0, c).toLowerCase))
-          hits += 1
+        if (c > 0 && c <= 32 &&
+            EmlHeaders.contains(line.substring(0, c).toLowerCase(java.util.Locale.ROOT))) hits += 1
         checked += 1
       }
     }
@@ -589,7 +589,7 @@ object Magic {
   }
 
   private def looksLikeHtmlStr(prefix: String): Boolean = {
-    val t = prefix.dropWhile(_.isWhitespace).toLowerCase
+    val t = prefix.dropWhile(_.isWhitespace).toLowerCase(java.util.Locale.ROOT)
     t.startsWith("<!doctype html") || t.startsWith("<html") ||
     t.startsWith("<head") || t.startsWith("<body") ||
     (t.startsWith("<") && (t.contains("<html") || t.contains("<body") || t.contains("<div") || t.contains("<p>")))

@@ -1,5 +1,7 @@
 package graft.kernel
 
+import java.util.Locale
+
 /** Media-container kernels: WAV (RIFF), MP4 (ISO BMFF), BMP and WebP —
   * container metadata (dimensions, duration, sample rate) extracted here;
   * pixel/sample decode lives in PixelDecode/JpegDecoder/WebpDecode (real
@@ -31,7 +33,7 @@ object WavKernel {
         meta += ("xmpDM:audioSampleRate" -> sampleRate.toString)
         meta += ("bits" -> bits.toString)
       } else if (id == "data" && byteRate > 0) {
-        meta += ("xmpDM:duration" -> f"${size.toDouble / byteRate}%.3f")
+        meta += ("xmpDM:duration" -> "%.3f".formatLocal(Locale.ROOT, size.toDouble / byteRate))
       }
       val advance = size + (size & 1) // chunks are word-aligned
       // Bound-check in Long: a u32 size like 0xFFFFFFF8 truncates to a
@@ -168,7 +170,7 @@ object Mp4Kernel {
                 (u32(body.toInt + 20), u64(body.toInt + 24))
               else (u32(body.toInt + 12), u32(body.toInt + 16))
             if (timescale > 0)
-              meta += ("xmpDM:duration" -> f"${duration.toDouble / timescale}%.3f")
+              meta += ("xmpDM:duration" -> "%.3f".formatLocal(Locale.ROOT, duration.toDouble / timescale))
           case "tkhd" if size >= hdr + 84 =>
             // v0 layout: width/height are the LAST 8 bytes, 16.16 fixed
             val e = (p + size).toInt
@@ -440,7 +442,7 @@ object OggKernel {
     def withDuration(m: Map[String, String], rate: Long): Map[String, String] = {
       val g = lastGranule
       if (g > 0 && rate > 0 && g < (1L << 48))
-        m + ("xmpDM:duration" -> f"${g.toDouble / rate}%.3f")
+        m + ("xmpDM:duration" -> "%.3f".formatLocal(Locale.ROOT, g.toDouble / rate))
       else m
     }
     // Vorbis: 0x01 "vorbis" version(4) channels(1) rate(4 LE) ...

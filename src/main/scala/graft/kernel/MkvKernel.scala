@@ -1,6 +1,7 @@
 package graft.kernel
 
 import java.nio.charset.StandardCharsets
+import java.util.Locale
 
 /** Matroska / WebM container metadata (EBML, per the public Matroska
   * element registry): DocType routing, Segment Info (title, duration at
@@ -233,7 +234,7 @@ object MkvKernel {
                         case _           => ()
                       }
                     }
-                    val mapped = name.toUpperCase match {
+                    val mapped = name.toUpperCase(Locale.ROOT) match {
                       case "TITLE"  => "dc:title"
                       case "ARTIST" => "xmpDM:artist"
                       case "GENRE"  => "xmpDM:genre"
@@ -251,7 +252,7 @@ object MkvKernel {
     }
     if (!durationUnits.isNaN && durationUnits >= 0) {
       val secs = durationUnits * timestampScale / 1e9
-      meta += ("xmpDM:duration" -> f"$secs%.3f")
+      meta += ("xmpDM:duration" -> "%.3f".formatLocal(Locale.ROOT, secs))
     }
     Mkv(meta, hasVideo, hasAudio)
   }

@@ -1,6 +1,7 @@
 package graft.kernel
 
 import java.io.ByteArrayInputStream
+import java.util.Locale
 import javax.xml.stream.XMLStreamConstants
 
 /** Round-2 format-tail kernels: RTF, ODT, EPUB, TIFF, MP3/ID3 — the next
@@ -406,7 +407,7 @@ object EpubKernel {
     var opfPath = ""
     var spineHrefs = Vector.empty[String]
     OoxmlUtil.walkZip(bytes) { (name, read) =>
-      val lower = name.toLowerCase
+      val lower = name.toLowerCase(Locale.ROOT)
       if (!lower.startsWith("meta-inf/") &&
           (lower.endsWith(".xhtml") || lower.endsWith(".html") || lower.endsWith(".htm")))
         parts :+= (name, read())
@@ -629,12 +630,12 @@ object Mp3Kernel {
             } else None
           vbrDur match {
             case Some(d) =>
-              meta += ("xmpDM:duration" -> f"$d%.3f")
+              meta += ("xmpDM:duration" -> "%.3f".formatLocal(Locale.ROOT, d))
               meta += ("xmpDM:audioChannelType" ->
                 (if (chMode == 3) "Mono" else "Stereo"))
             case None =>
               val audioBytes = audioEnd - q // v1 trailer excluded
-              meta += ("xmpDM:duration" -> f"${audioBytes.toDouble * 8 / bitrate}%.3f")
+              meta += ("xmpDM:duration" -> "%.3f".formatLocal(Locale.ROOT, audioBytes.toDouble * 8 / bitrate))
           }
           done = true
         } else q += 1
@@ -676,7 +677,7 @@ object FlacKernel {
       "bits" -> bits.toString,
       "xmpDM:audioCompressor" -> "FLAC")
     if (totalSamples > 0)
-      meta += ("xmpDM:duration" -> f"${totalSamples.toDouble / sampleRate}%.3f")
+      meta += ("xmpDM:duration" -> "%.3f".formatLocal(Locale.ROOT, totalSamples.toDouble / sampleRate))
     // walk the remaining metadata blocks for VORBIS_COMMENT (type 4):
     // vendor string + KEY=value pairs (the FLAC tag container)
     def u32le(q: Int): Long =
@@ -711,7 +712,7 @@ object FlacKernel {
                 java.nio.charset.StandardCharsets.UTF_8)
               val eq = comment.indexOf('=')
               if (eq > 0) {
-                val key = comment.substring(0, eq).toUpperCase
+                val key = comment.substring(0, eq).toUpperCase(Locale.ROOT)
                 val v = comment.substring(eq + 1).trim
                 tagKeys.get(key).foreach { mk =>
                   if (v.nonEmpty && !meta.contains(mk)) meta += (mk -> v)

@@ -1,5 +1,7 @@
 package graft.kernel
 
+import java.util.Locale
+
 /** PNG/GIF header metadata (dimensions, bit depth): the image-format
   * breadth the reference gets from its Tika delegate (reference:
   * README.md:3-8 "any file type Tika supports"; JPEG's observable contract
@@ -61,8 +63,8 @@ object PngKernel {
             val py = u32(p + 12)
             val unit = bytes(p + 16) & 0xff
             if (unit == 1 && px > 0) { // metre -> dpi
-              meta += ("X Resolution" -> f"${px / 39.3701}%.0f dots per inch")
-              meta += ("Y Resolution" -> f"${py / 39.3701}%.0f dots per inch")
+              meta += ("X Resolution" -> "%.0f dots per inch".formatLocal(Locale.ROOT, px / 39.3701))
+              meta += ("Y Resolution" -> "%.0f dots per inch".formatLocal(Locale.ROOT, py / 39.3701))
             }
           case "tIME" if len >= 7 =>
             val yr = ((bytes(p + 8) & 0xff) << 8) | (bytes(p + 9) & 0xff)

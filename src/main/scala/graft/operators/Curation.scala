@@ -1,33 +1,44 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Corpus-curation operators — the composition layer of a training-data
   * pipeline: deterministic stratified sampling, a quality/length/dup
   * filter pipeline, and near-dup clustering. All are pure Catalyst
   * column expressions over the shared md5 hash primitive, so the DuckDB
-  * oracles mirror them bit-for-bit.
+  * oracles mirror them bit-for-bit. Documents carry `doc_id` and `text`.
   */
 object Curation {
 
+  // shared with the DuckDB oracle SQL (SparkEntry renders the same values)
+  val Strata = "lang"
+  // in order: the Spark `when` chain and the oracle's CASE follow it
+  val Rates: Seq[(String, Double)] = Seq("en" -> 0.5, "de" -> 0.25, "zh" -> 0.1)
+  val DefaultRate = 0.05
+  val Buckets = 1000000L             // sampling resolution
+  val MinQuality = 0.3
+  val MinTokens = 20
+  val MaxTokens = 100000
+  val Rounds = 3                     // dupClusters' default round count
+  private val MaxRounds = 100        // dupClustersFixpoint's runaway guard
+
   /** Deterministic hash-based stratified sampling: a document is kept iff
-    * h64(stratum ':' id) mod 1e6 < rate(stratum) * 1e6. No RNG, no
-    * shuffle (a scan-local filter), reproducible across engines/runs —
-    * the only sampling shape that is exactly resumable at 10^12 rows.
+    * h64(stratum ':' id) mod Buckets < rate(stratum) * Buckets, with
+    * the stratum in column Strata. No RNG, no shuffle (a scan-local
+    * filter), reproducible across engines/runs — the only sampling shape
+    * that is exactly resumable at 10^12 rows.
     */
-  def stratifiedSample(docs: DataFrame, strataCol: String,
-      rates: Map[String, Double], defaultRate: Double = 0.0,
-      idCol: String = "doc_id"): DataFrame = {
-    val rate = rates.foldLeft(lit(defaultRate)) { case (acc, (k, v)) =>
-      when(col(strataCol) === k, lit(v)).otherwise(acc)
+  def stratifiedSample(docs: DataFrame): DataFrame = {
+    val rate = Rates.foldLeft(lit(DefaultRate)) { case (acc, (k, v)) =>
+      when(col(Strata) === k, lit(v)).otherwise(acc)
     }
     docs
-      .withColumn("bucket", pmod(Dedup.h64(
-        concat_ws(":", col(strataCol), col(idCol))), lit(1000000L)))
-      .filter(col("bucket") < (rate * 1000000.0).cast("long"))
-      .select(col(idCol), col(strataCol), col("bucket"))
-      .orderBy(idCol)
+      .withColumn("bucket", pmod(graft.functions.h64(
+        concat_ws(":", col(Strata), col("doc_id"))), lit(Buckets)))
+      .filter(col("bucket") < (rate * Buckets.toDouble).cast("long"))
+      .select(col("doc_id"), col(Strata), col("bucket"))
+      .orderBy("doc_id")
   }
 
   /** Training-data filter pipeline: per-doc keep/drop with a reason —
@@ -35,25 +46,23 @@ object Curation {
     * too_long (whitespace tokens), low_quality (TextOps score), in that
     * precedence. One groupBy on md5(text) + scan-local features.
     */
-  def filterPipeline(docs: DataFrame, minQuality: Double = 0.3,
-      minTokens: Int = 20, maxTokens: Int = 100000,
-      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val q = TextOps.quality(docs, idCol, textCol)
-      .select(col(idCol), col("n_tokens"), col("quality_score"))
-    val canon = docs.groupBy(md5(col(textCol)).as("text_hash"))
-      .agg(min(col(idCol)).as("canonical"))
-    val withCanon = docs.select(col(idCol), md5(col(textCol)).as("text_hash"))
+  def filterPipeline(docs: DataFrame): DataFrame = {
+    val q = TextOps.quality(docs)
+      .select(col("doc_id"), col("n_tokens"), col("quality_score"))
+    val canon = docs.groupBy(md5(col("text")).as("text_hash"))
+      .agg(min(col("doc_id")).as("canonical"))
+    val withCanon = docs.select(col("doc_id"), md5(col("text")).as("text_hash"))
       .join(canon, "text_hash")
-    q.join(withCanon, idCol)
+    q.join(withCanon, "doc_id")
       .withColumn("reason",
-        when(col(idCol) =!= col("canonical"), "duplicate")
-          .when(col("n_tokens") < minTokens, "too_short")
-          .when(col("n_tokens") > maxTokens, "too_long")
-          .when(col("quality_score") < minQuality, "low_quality")
+        when(col("doc_id") =!= col("canonical"), "duplicate")
+          .when(col("n_tokens") < MinTokens, "too_short")
+          .when(col("n_tokens") > MaxTokens, "too_long")
+          .when(col("quality_score") < MinQuality, "low_quality")
           .otherwise(""))
-      .select(col(idCol), col("n_tokens"), col("quality_score"),
+      .select(col("doc_id"), col("n_tokens"), col("quality_score"),
         col("canonical"), (col("reason") === "").as("keep"), col("reason"))
-      .orderBy(idCol)
+      .orderBy("doc_id")
   }
 
   /** Near-dup clusters from verified pairs via K rounds of min-label
@@ -63,17 +72,17 @@ object Curation {
     * warehouse-scale variant.
     * Output: (doc_id, cluster_rep).
     */
-  def dupClusters(pairs: DataFrame, iterations: Int = 3): DataFrame =
+  def dupClusters(pairs: DataFrame, iterations: Int = Rounds): DataFrame =
     propagate(pairs, iterations, toFixpoint = false)
 
   /** Min-label propagation TO CONVERGENCE (connected components): rounds
-    * run until one changes zero labels, bounded by `maxIterations` as a
+    * run until one changes zero labels, bounded by MaxRounds as a
     * runaway guard (rounds needed = max component diameter; near-dup
     * components are near-cliques, so convergence is fast in practice but
     * NOT guaranteed by any fixed K).
     */
-  def dupClustersFixpoint(pairs: DataFrame, maxIterations: Int = 100): DataFrame =
-    propagate(pairs, maxIterations, toFixpoint = true)
+  def dupClustersFixpoint(pairs: DataFrame): DataFrame =
+    propagate(pairs, MaxRounds, toFixpoint = true)
 
   /** Iterative core. The classic iterative-Spark failure mode is rebinding
     * `labels = labels.join(...)` with the full upstream pipeline embedded:

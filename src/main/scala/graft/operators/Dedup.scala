@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -15,40 +15,45 @@ import org.apache.spark.storage.StorageLevel
   * planner-visible skew; LSH banding turns the quadratic near-dup search
   * into an equi-join on band keys (the only scalable shape at 10^12 docs —
   * candidate pairs per band bucket, verified exactly afterwards).
+  *
+  * Input contract: documents carry `doc_id` (unique) and `text`;
+  * embeddings carry `vec_id` and `embedding`.
   */
 object Dedup {
 
-  // shared with the DuckDB oracle SQL (SparkEntry renders the same
-  // constants into both sides)
+  // Every constant below is shared with the DuckDB oracle SQL:
+  // SparkEntry renders the same values into both sides.
   val P: Long = 2147483647L          // Mersenne prime 2^31-1: a,h < 2^31 so a*h+b < 2^63 (no overflow in either engine)
   val NumHashes = 16
   val Bands = 4                      // 4 bands x 4 rows
   val RowsPerBand: Int = NumHashes / Bands
   val HashA: IndexedSeq[Long] = (0 until NumHashes).map(i => ((2L * i + 1) * 2654435761L) % P)
   val HashB: IndexedSeq[Long] = (0 until NumHashes).map(i => (i.toLong * 40503L + 2531011L) % P)
-
-  /** bigint hash of a string column: first 15 hex chars of md5 — native
-    * one-call expression (thread-local digest, no hex-string round trip;
-    * see functions.h64). Bit-identical to the conv(substring(md5)) chain.
-    */
-  def h64(c: Column): Column = graft.functions.h64(c)
-
-  // lower via UTF8String (functions.lower_u8): Catalyst lower() routes
-  // through ICU whose one-time init stalls the first 32-task stage
-  def tokens(text: Column): Column = split(graft.functions.lower_u8(text), " ")
+  val Shingle = 3                    // words per shingle (minhash and n-gram Jaccard)
+  val MinhashThreshold = 0.5
+  val JaccardThreshold = 0.5
+  val DfCap = 1024                   // see ngramJaccard
+  val SimhashBits = 60               // h64 width
+  // Pigeonhole: SimhashMaxHamming < SimhashBlocks, so every pair within
+  // the distance keeps at least one of the blocks intact.
+  val SimhashBlocks = 4
+  val SimhashMaxHamming = 3
+  val SimhashBlockBits: Int = SimhashBits / SimhashBlocks
+  val SimhashBlockMask: Long = (1L << SimhashBlockBits) - 1L
+  val CosineThreshold = 0.4
 
   /** Exact dedup: group identical texts by content hash.
     * Output: (text_hash, n_docs, representative = min doc_id, doc_ids).
     */
-  def exact(docs: DataFrame, idCol: String = "doc_id", textCol: String = "text"): DataFrame =
-    docs.groupBy(md5(col(textCol)).as("text_hash"))
+  def exact(docs: DataFrame): DataFrame =
+    docs.groupBy(md5(col("text")).as("text_hash"))
       .agg(count(lit(1)).as("n_docs"),
-        min(col(idCol)).as("representative"))
+        min(col("doc_id")).as("representative"))
       .filter(col("n_docs") > 1)
       .orderBy("text_hash")
 
   /** MinHash + LSH banding + exact-Jaccard verification.
-    * Output: (doc_a, doc_b, jaccard) for verified pairs >= threshold.
+    * Output: (doc_a, doc_b, jaccard) for verified pairs >= MinhashThreshold.
     *
     * One projection computes each document's NumHashes-lane signature
     * (functions.minhash_sig: no per-shingle rows, no aggregation); the
@@ -56,14 +61,13 @@ object Dedup {
     * the (band, bkey) self-join fetch both texts by doc_id and are
     * verified in-row by functions.shingle_overlap.
     *
-    * Assumes `idCol` is unique: a repeated id would fetch every text
+    * Assumes `doc_id` is unique: a repeated id would fetch every text
     * carrying it into the verification join. A candidate pair with no
-    * shared shingle has jaccard 0.0, so `threshold <= 0` keeps it (as the
-    * oracle's LEFT JOIN/coalesce does); any threshold > 0 drops it.
+    * shared shingle has jaccard 0.0, which the threshold drops (the
+    * oracle's LEFT JOIN/coalesce computes the same 0.0).
     */
-  def minhashLsh(docs: DataFrame, threshold: Double = 0.5,
-      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val base = docs.select(col(idCol).as("doc_id"), col(textCol).as("text"))
+  def minhashLsh(docs: DataFrame): DataFrame = {
+    val base = docs.select(col("doc_id"), col("text"))
     val sig = base.select(col("doc_id"), graft.functions.minhash_sig(col("text")).as("sig"))
     val bandStructs = (0 until Bands).map { b =>
       val lanes = (0 until RowsPerBand).map(r => col("sig").getItem(b * RowsPerBand + r))
@@ -84,11 +88,11 @@ object Dedup {
       .join(base.as("a"), col("doc_a") === col("a.doc_id"))
       .join(base.as("b"), col("doc_b") === col("b.doc_id"))
       .select(col("doc_a"), col("doc_b"),
-        graft.functions.shingle_overlap(col("a.text"), col("b.text"), 3).as("o"))
+        graft.functions.shingle_overlap(col("a.text"), col("b.text"), Shingle).as("o"))
     ov.select(col("doc_a"), col("doc_b"),
         round(col("o.inter").cast("double") /
           (col("o.na") + col("o.nb") - col("o.inter")), 6).as("jaccard"))
-      .filter(col("jaccard") >= threshold)
+      .filter(col("jaccard") >= MinhashThreshold)
       .orderBy("doc_a", "doc_b")
   }
 
@@ -99,18 +103,20 @@ object Dedup {
     * same input, so the first consumer computes them and the others pay
     * only propagation.
     */
-  def minhashLshCached(docs: DataFrame, threshold: Double): DataFrame = {
-    val df = minhashLsh(docs, threshold)
+  def minhashLshCached(docs: DataFrame): DataFrame = {
+    val df = minhashLsh(docs)
     if (df.storageLevel == StorageLevel.NONE) df.persist(StorageLevel.MEMORY_AND_DISK)
     else df
   }
 
   /** Per-doc SimHash signatures, unsorted (building block). */
-  def simhashSigs(docs: DataFrame, idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val tok = docs.select(col(idCol).as("doc_id"),
-      explode(tokens(col(textCol))).as("t"))
+  def simhashSigs(docs: DataFrame): DataFrame = {
+    // lower via UTF8String (functions.lower_u8): Catalyst lower() routes
+    // through ICU whose one-time init stalls the first 32-task stage
+    val tok = docs.select(col("doc_id"),
+        explode(split(graft.functions.lower_u8(col("text")), " ")).as("t"))
       .filter(col("t") =!= "")
-      .withColumn("h", h64(col("t"))) // 60-bit value: bits 0..59 meaningful
+      .withColumn("h", graft.functions.h64(col("t"))) // 60-bit value: bits 0..59 meaningful
     // native TypedImperativeAggregate: one shuffle of 240-byte vote
     // buffers per doc instead of exploding 60 bit rows per token
     tok.groupBy("doc_id")
@@ -120,69 +126,72 @@ object Dedup {
   /** 60-bit SimHash per doc (token-frequency weighted bit voting).
     * Output: (doc_id, simhash).
     */
-  def simhash(docs: DataFrame, idCol: String = "doc_id", textCol: String = "text"): DataFrame =
-    simhashSigs(docs, idCol, textCol).orderBy("doc_id")
+  def simhash(docs: DataFrame): DataFrame = simhashSigs(docs).orderBy("doc_id")
 
-  /** SimHash near-dup PAIRS via bit-block banding: the 60-bit signature is
-    * split into `blocks` contiguous blocks; by pigeonhole, any pair within
-    * Hamming distance `maxHamming` <= blocks-1 shares at least one intact
-    * block, so the quadratic search becomes an equi-join on
+  /** SimHash near-dup PAIRS via bit-block banding: the signature is split
+    * into SimhashBlocks contiguous blocks; by pigeonhole, any pair within
+    * Hamming distance SimhashMaxHamming shares at least one intact block,
+    * so the quadratic search becomes an equi-join on
     * (block_idx, block_value) — candidate pairs only, verified exactly
     * with bit_count(xor). Output: (doc_a, doc_b, hamming).
     */
-  def simhashPairs(docs: DataFrame, maxHamming: Int = 3, blocks: Int = 4,
-      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    require(maxHamming < blocks, "pigeonhole needs maxHamming <= blocks-1")
-    val bitsPerBlock = 60 / blocks
-    val mask = (1L << bitsPerBlock) - 1L
-    val sigs = simhashSigs(docs, idCol, textCol)
-    val blockStructs = (0 until blocks).map { b =>
-      struct(lit(b).as("bi"),
-        shiftrightunsigned(col("simhash"), b * bitsPerBlock)
-          .bitwiseAND(lit(mask)).as("bv"))
+  def simhashPairs(docs: DataFrame): DataFrame =
+    hammingPairs(simhashSigs(docs), SimhashBlocks, SimhashBlockBits, SimhashMaxHamming,
+      "doc_a", "doc_b")
+
+  /** Pairs of `sigs` rows (id, hash) whose hashes differ in at most
+    * `maxHamming` bits. The low blocks x blockBits hash bits are split
+    * into `blocks` blocks; a pair within maxHamming < blocks shares an
+    * intact block (pigeonhole), so candidates come from an equi-join on
+    * (block_idx, block_value) and are verified with bit_count(xor).
+    * Output: (a, b, hamming) with a < b, ordered.
+    */
+  private[operators] def hammingPairs(sigs: DataFrame, blocks: Int, blockBits: Int,
+      maxHamming: Int, a: String, b: String): DataFrame = {
+    val Array(id, hash) = sigs.columns
+    val blockStructs = (0 until blocks).map { i =>
+      struct(lit(i).as("bi"),
+        shiftrightunsigned(col(hash), i * blockBits)
+          .bitwiseAND(lit((1L << blockBits) - 1L)).as("bv"))
     }
-    val blk = sigs.select(col("doc_id"), col("simhash"),
-        explode(array(blockStructs: _*)).as("bb"))
-      .select(col("doc_id"), col("simhash"),
-        col("bb.bi").as("bi"), col("bb.bv").as("bv"))
+    val blk = sigs.select(col(id), col(hash), explode(array(blockStructs: _*)).as("bb"))
+      .select(col(id), col(hash), col("bb.bi").as("bi"), col("bb.bv").as("bv"))
     // both sides shuffle identically on (bi, bv) => ReuseExchange when
     // the planner shuffles; at bench scale it broadcasts one side, which
-    // measured FASTER than a pinned shuffle_hash (the signature table is
-    // one short row per doc — rebuild is an agg over the reused
-    // Exchange(doc_id), cheaper than two extra exchange barriers)
-    val cand = blk.as("x").join(blk.as("y"),
+    // measured FASTER than a pinned shuffle_hash for both callers (the
+    // signature table is one short row per id; a pinned shuffle added two
+    // exchange barriers)
+    blk.as("x").join(blk.as("y"),
         col("x.bi") === col("y.bi") && col("x.bv") === col("y.bv") &&
-        col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"),
-        col("x.simhash").as("sa"), col("y.simhash").as("sb"))
+        col(s"x.$id") < col(s"y.$id"))
+      .select(col(s"x.$id").as(a), col(s"y.$id").as(b),
+        col(s"x.$hash").as("ha"), col(s"y.$hash").as("hb"))
       .distinct()
-    cand.select(col("doc_a"), col("doc_b"),
-        bit_count(col("sa").bitwiseXOR(col("sb"))).as("hamming"))
+      .select(col(a), col(b), bit_count(col("ha").bitwiseXOR(col("hb"))).as("hamming"))
       .filter(col("hamming") <= maxHamming)
-      .orderBy("doc_a", "doc_b")
+      .orderBy(a, b)
   }
 
   /** Exact n-gram (shingle) Jaccard near-dup pairs over an inverted index
     * (join on shared shingles — never a cross join).
     *
-    * Hot-shingle cap: a shingle appearing in > dfCap documents contributes
-    * dfCap²-bounded pair rows, so without a cap one stopword-like shingle
+    * Hot-shingle cap: a shingle appearing in > DfCap documents contributes
+    * DfCap²-bounded pair rows, so without a cap one stopword-like shingle
     * shared by k docs yields k² rows inside a single join key — the
     * classic inverted-index scale-killer on Zipf corpora. Shingles with
-    * document frequency > dfCap are dropped from the shingle universe
+    * document frequency > DfCap are dropped from the shingle universe
     * entirely (both the index AND the per-doc set sizes), i.e. Jaccard is
     * computed over the capped universe; ubiquitous shingles carry no
     * near-dup signal, and the DuckDB oracle mirrors the same cap.
-    * Output: (doc_a, doc_b, jaccard >= threshold).
+    * Output: (doc_a, doc_b, jaccard >= JaccardThreshold).
     */
-  def ngramJaccard(docs: DataFrame, threshold: Double = 0.5, dfCap: Int = 1024,
-      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val all = docs.select(col(idCol).as("doc_id"),
-      explode(graft.functions.shingles_distinct(col(textCol), 3)).as("sh"))
+  def ngramJaccard(docs: DataFrame): DataFrame = {
+    val all = docs.select(col("doc_id"),
+      explode(graft.functions.shingles_distinct(col("text"), Shingle)).as("sh"))
     // df filter first: the rare-shingle table and the self-join below share
     // the `sh` hash-partitioning, so the exchange is reused
     val rare = all.groupBy("sh").agg(count(lit(1)).as("df"))
-      .filter(col("df") <= dfCap).select("sh")
+      .filter(col("df") <= DfCap).select("sh")
     val shs = all.join(rare, Seq("sh"))
     val counts = shs.groupBy("doc_id").agg(count(lit(1)).as("n"))
     // shuffle_hash pins the self-join to a shuffled build instead of the
@@ -202,7 +211,7 @@ object Dedup {
       .select(col("doc_a"), col("doc_b"),
         round(col("inter").cast("double") /
           (col("ca.n") + col("cb.n") - col("inter")), 6).as("jaccard"))
-      .filter(col("jaccard") >= threshold)
+      .filter(col("jaccard") >= JaccardThreshold)
       .orderBy("doc_a", "doc_b")
   }
 
@@ -210,17 +219,13 @@ object Dedup {
     * the exact small-scale oracle for [[embedCosineGated]] — never the
     * shipped scale path.
     */
-  def embedCosineExact(emb: DataFrame, threshold: Double = 0.4,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    import graft.functions.dot_f64
-    val withNorm = emb.select(col(idCol).as("id"), col(vecCol).as("v"))
-      .withColumn("norm", sqrt(dot_f64(col("v"), col("v"))))
+  def embedCosineExact(emb: DataFrame): DataFrame = {
+    val withNorm = Ann.normed(emb, "id", "v", "norm")
     val pairs = withNorm.as("a").crossJoin(withNorm.as("b"))
       .filter(col("a.id") < col("b.id"))
     pairs.select(col("a.id").as("id_a"), col("b.id").as("id_b"),
-        round(dot_f64(col("a.v"), col("b.v")) / (col("a.norm") * col("b.norm")),
-          4).as("cosine"))
-      .filter(col("cosine") >= threshold)
+        Ann.cosine("a.v", "a.norm", "b.v", "b.norm", 4).as("cosine"))
+      .filter(col("cosine") >= CosineThreshold)
       .orderBy("id_a", "id_b")
   }
 
@@ -233,11 +238,8 @@ object Dedup {
     * hyperplanes are deterministic so the DuckDB oracle mirrors the gate
     * bit-for-bit.
     */
-  def embedCosineGated(emb: DataFrame, threshold: Double = 0.4,
-      nTables: Int = 8, nBits: Int = 16, seed: Long = 42L,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    import graft.functions.dot_f64
-    val sigs = Ann.lshSignatures(emb, nTables, nBits, seed, idCol, vecCol)
+  def embedCosineGated(emb: DataFrame): DataFrame = {
+    val sigs = Ann.lshSignatures(emb, Ann.dimsOf(emb))
     // both sides shuffle identically on (tbl, sig) => ReuseExchange;
     // shuffle_hash pins that shape (broadcast would recompute the
     // 128-hyperplane signature projection per side)
@@ -246,15 +248,13 @@ object Dedup {
         col("x.id") < col("y.id"))
       .select(col("x.id").as("id_a"), col("y.id").as("id_b"))
       .distinct()
-    val base = emb.select(col(idCol).as("id"), col(vecCol).as("v"))
-      .withColumn("norm", sqrt(dot_f64(col("v"), col("v"))))
+    val base = Ann.normed(emb, "id", "v", "norm")
     cand
       .join(base.as("a"), col("id_a") === col("a.id"))
       .join(base.as("b"), col("id_b") === col("b.id"))
       .select(col("id_a"), col("id_b"),
-        round(dot_f64(col("a.v"), col("b.v")) / (col("a.norm") * col("b.norm")),
-          4).as("cosine"))
-      .filter(col("cosine") >= threshold)
+        Ann.cosine("a.v", "a.norm", "b.v", "b.norm", 4).as("cosine"))
+      .filter(col("cosine") >= CosineThreshold)
       .orderBy("id_a", "id_b")
   }
 }

@@ -8,17 +8,29 @@ import graft.kernel.RawImage
   * (kernel/PixelDecode.scala): box-filter resize, 64-bit average-hash, and
   * content-level near-duplicate pairing.
   *
-  * The dedup shape mirrors dedup_simhash_pairs (Dedup.simhashPairs): the
-  * 64-bit hash is split into `blocks` bit-blocks, a pair within Hamming
-  * distance maxHamming must agree on at least one block (pigeonhole), so
-  * the quadratic search becomes a block equi-join with exact bit_count
-  * verification — no crossJoin at any scale, both join sides share one
-  * exchange. This catches what byte-level dedup cannot: the same image
-  * re-encoded (different PNG scanline filters, BMP row order, GIF palette
-  * rotation) hashes identically at the pixel level while every byte of the
-  * container differs.
+  * The dedup shape is dedup_simhash_pairs' (Dedup.hammingPairs): the
+  * 64-bit hash is split into bit-blocks, a pair within the Hamming
+  * distance must agree on at least one block (pigeonhole), so the
+  * quadratic search becomes a block equi-join with exact bit_count
+  * verification — no crossJoin at any scale. This catches what
+  * byte-level dedup cannot: the same image re-encoded (different PNG
+  * scanline filters, BMP row order, GIF palette rotation) hashes
+  * identically at the pixel level while every byte of the container
+  * differs.
   */
 object ImageOps {
+
+  // aHash pairs: pigeonhole-complete (AHashMaxHamming < AHashBlocks)
+  val AHashMaxHamming = 3
+  val AHashBlocks = 4
+  // pHash pairs: one clean block among PHashBlocks suffices, which real
+  // (non-adversarial) codec noise virtually always leaves — measured
+  // recall 8/8 on the planted cross-codec pool (errors cluster in few
+  // coefficients; pool band 2-12 with the true 63-element AC median).
+  // Only the candidate stage is probabilistic; emitted pairs are exactly
+  // verified.
+  val PHashMaxHamming = 12
+  val PHashBlocks = 8
 
   /** Box-filter resize of the luma plane to tw x th (area-weighted mean
     * over each destination cell — exact for integer ratios, well-behaved
@@ -123,52 +135,22 @@ object ImageOps {
     hash
   }
 
-  /** Content-level near-dup image pairs within `maxHamming` bits
-    * (pigeonhole-complete for maxHamming <= blocks-1). Output:
-    * (ref_a, ref_b, hamming). perceptual=true hashes with pHash64
-    * (DCT low-frequency structure), which survives LOSSY re-encodes —
-    * the cross-codec dedup a byte or exact-pixel hash cannot do.
+  /** Content-level near-dup image pairs. Output: (ref_a, ref_b, hamming).
+    * perceptual=false pairs aHash64 within AHashMaxHamming bits;
+    * perceptual=true pairs pHash64 (DCT low-frequency structure) within
+    * PHashMaxHamming bits, which survives LOSSY re-encodes — the
+    * cross-codec dedup a byte or exact-pixel hash cannot do.
     */
-  def dupImages(spark: SparkSession, media: DataFrame, maxHamming: Int = 3,
-      blocks: Int = 4, perceptual: Boolean = false): DataFrame = {
-    // pigeonhole-COMPLETE for maxHamming <= blocks-1; beyond that the
-    // candidate stage needs one clean block among `blocks`, which real
-    // (non-adversarial) codec noise virtually always leaves — measured
-    // recall 8/8 on the planted cross-codec pool at maxHamming=12,
-    // blocks=8 (errors cluster in few coefficients; pool band 2-12 with
-    // the true 63-element AC median). Only the candidate stage is
-    // probabilistic; emitted pairs are exactly verified.
-    require(blocks >= 2 && 64 % blocks == 0, "blocks must divide 64")
-    val bitsPerBlock = 64 / blocks
-    val mask = if (bitsPerBlock == 64) -1L else (1L << bitsPerBlock) - 1L
-    val hashCol = if (perceptual) "phash" else "ahash"
+  def dupImages(spark: SparkSession, media: DataFrame, perceptual: Boolean): DataFrame = {
+    val (maxHamming, blocks, hashCol) =
+      if (perceptual) (PHashMaxHamming, PHashBlocks, "phash")
+      else (AHashMaxHamming, AHashBlocks, "ahash")
     // hashes of the payloads Multimodal.decodePixels accepts, from the
     // shared analysis table (one pixel decode per payload for all three
-    // image queries)
+    // image queries; persisted, so neither join side recomputes it)
     val sigs = Multimodal.imageAnalysisCached(spark, media)
       .filter(col("pixel_decode"))
       .select(col("media_ref"), col(hashCol).as("ahash"))
-    val blockStructs = (0 until blocks).map { b =>
-      struct(lit(b).as("bi"),
-        shiftrightunsigned(col("ahash"), b * bitsPerBlock)
-          .bitwiseAND(lit(mask)).as("bv"))
-    }
-    val blk = sigs.select(col("media_ref"), col("ahash"),
-        explode(array(blockStructs: _*)).as("bb"))
-      .select(col("media_ref"), col("ahash"),
-        col("bb.bi").as("bi"), col("bb.bv").as("bv"))
-    // the planner broadcasts one side: correct here — the input is the
-    // persisted 8-byte-hash table (tiny, no recompute), and a measured
-    // shuffle_hash variant added two exchange barriers for no win
-    val cand = blk.as("x").join(blk.as("y"),
-        col("x.bi") === col("y.bi") && col("x.bv") === col("y.bv") &&
-        col("x.media_ref") < col("y.media_ref"))
-      .select(col("x.media_ref").as("ref_a"), col("y.media_ref").as("ref_b"),
-        col("x.ahash").as("ha"), col("y.ahash").as("hb"))
-      .distinct()
-    cand.select(col("ref_a"), col("ref_b"),
-        bit_count(col("ha").bitwiseXOR(col("hb"))).as("hamming"))
-      .filter(col("hamming") <= maxHamming)
-      .orderBy("ref_a", "ref_b")
+    Dedup.hammingPairs(sigs, blocks, 64 / blocks, maxHamming, "ref_a", "ref_b")
   }
 }

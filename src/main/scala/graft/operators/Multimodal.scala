@@ -64,6 +64,11 @@ object Multimodal {
     hist.map(_ / n)
   }
 
+  /** A media row's `bytes_b64`, decoded; empty for null or "". */
+  private def payload(b64: String): Array[Byte] =
+    if (b64 == null || b64.isEmpty) Array.emptyByteArray
+    else java.util.Base64.getDecoder.decode(b64)
+
   /** Bins of the `feature` vector. */
   val FeatureDim = 8
 
@@ -95,9 +100,7 @@ object Multimodal {
   // fresh lambda-variable ids for every encoder, so two plans never match.
   private val analyze: Iterator[(String, String)] => Iterator[ImageAnalysis] =
     _.map { case (ref, b64) =>
-      val bytes =
-        if (b64 == null || b64.isEmpty) Array.emptyByteArray
-        else java.util.Base64.getDecoder.decode(b64)
+      val bytes = payload(b64)
       val kind = Magic.sniff(bytes)
       val meta = imageMeta(bytes, kind)
       val pixels = decodePixels(bytes, kind)
@@ -189,9 +192,7 @@ object Multimodal {
       .as[(String, String)]
       .mapPartitions { it =>
         it.map { case (ref, b64) =>
-          val bytes =
-            if (b64 == null || b64.isEmpty) Array.emptyByteArray
-            else java.util.Base64.getDecoder.decode(b64)
+          val bytes = payload(b64)
           val kind = Magic.sniff(bytes)
           val ct = Magic.contentTypeOf(kind, None)
           (if (kind == Magic.Kind.Wav) WavDecoder.decode(bytes) else None) match {
@@ -246,9 +247,7 @@ object Multimodal {
     import spark.implicits._
     media.select(col("media_ref"), col("bytes_b64")).as[(String, String)]
       .flatMap { case (ref, b64) =>
-        val bytes =
-          if (b64 == null || b64.isEmpty) Array.emptyByteArray
-          else java.util.Base64.getDecoder.decode(b64)
+        val bytes = payload(b64)
         val kind = Magic.sniff(bytes)
         val gifFrames =
           if (kind == Magic.Kind.Gif) GifDecoder.decodeFrames(bytes) else None

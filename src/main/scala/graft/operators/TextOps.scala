@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Text-analysis operators for training-data pipelines: quality scoring,
@@ -8,6 +8,7 @@ import org.apache.spark.sql.functions._
   * are pure Catalyst expressions (DuckDB-oracle-able); lang-ID wraps the
   * Lang kernel as a UDF whose profile tables are JVM-static per executor
   * (the reference's memoized-model pattern, reference: lib/rika.rb:104-107).
+  * Documents carry `doc_id` and `text`.
   */
 object TextOps {
 
@@ -15,8 +16,8 @@ object TextOps {
     * stopword ratios, and a composite quality score. Deterministic and
     * SQL-mirrorable (rounded ratios).
     */
-  def quality(docs: DataFrame, idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val t = col(textCol)
+  def quality(docs: DataFrame): DataFrame = {
+    val t = col("text")
     // one tokenizing pass (functions.text_stats); the previous column
     // form ran 13 interpreted HOF scans per row, each re-splitting the
     // text. Ratio/round arithmetic is unchanged Catalyst code, so the
@@ -24,7 +25,7 @@ object TextOps {
     val st = graft.functions.text_stats(t)
     val nToks = st.getField("n_tokens")
     docs.select(
-      col(idCol).as("doc_id"),
+      col("doc_id"),
       st.getField("n_chars").as("n_chars"),
       nToks.as("n_tokens"),
       round(st.getField("punct").cast("double") /
@@ -45,34 +46,32 @@ object TextOps {
     * ([a-z]+ | digit runs | single non-space symbols) — the standard
     * pre-tokenization shape.
     */
-  def tokenCounts(docs: DataFrame, idCol: String = "doc_id", textCol: String = "text"): DataFrame =
+  def tokenCounts(docs: DataFrame): DataFrame =
     docs.select(
-      col(idCol).as("doc_id"),
-      size(split(trim(col(textCol)), "\\s+")).as("ws_tokens"),
-      size(regexp_extract_all(graft.functions.lower_u8(col(textCol)),
+      col("doc_id"),
+      size(split(trim(col("text")), "\\s+")).as("ws_tokens"),
+      size(regexp_extract_all(graft.functions.lower_u8(col("text")),
         lit("[a-z]+|[0-9]+|[^a-z0-9 ]"), lit(0))).as("bpe_tokens"))
       .orderBy("doc_id")
 
-  /** Language-ID over any text column via the codegen LangOf expression
-    * (null-safe native call inlined into whole-stage codegen — no ScalaUDF
-    * ser/deser per row; the Lang profile tables stay JVM-static).
+  /** Language-ID via the codegen LangOf expression (null-safe native call
+    * inlined into whole-stage codegen — no ScalaUDF ser/deser per row; the
+    * Lang profile tables stay JVM-static).
     */
-  def langId(spark: SparkSession, docs: DataFrame,
-      idCol: String = "doc_id", textCol: String = "text"): DataFrame =
-    docs.select(col(idCol).as("doc_id"),
-      graft.functions.lang_of(col(textCol)).as("lang_pred"))
+  def langId(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), graft.functions.lang_of(col("text")).as("lang_pred"))
       .orderBy("doc_id")
 
   /** Document fingerprint: min/max/count over hashed 4-word shingles —
     * a winnowing-style content signature that survives reordering-free
     * edits and is cheap to compare at scale.
     */
-  def fingerprint(docs: DataFrame, idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
+  def fingerprint(docs: DataFrame): DataFrame = {
     // native codegen 4-gram shingles (see functions.shingles: the HOF form
     // re-split the text once per output shingle, O(tokens x shingles))
-    val sh = graft.functions.shingles(col(textCol), 4)
-    docs.select(col(idCol).as("doc_id"), explode(sh).as("s"))
-      .withColumn("h", Dedup.h64(col("s")))
+    val sh = graft.functions.shingles(col("text"), 4)
+    docs.select(col("doc_id"), explode(sh).as("s"))
+      .withColumn("h", graft.functions.h64(col("s")))
       .groupBy("doc_id")
       .agg(min(col("h")).as("fp_min"), max(col("h")).as("fp_max"),
         count(lit(1)).as("n_shingles"),

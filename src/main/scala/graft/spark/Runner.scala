@@ -18,6 +18,14 @@ import IcebergLite.{PartCounts, Summary}
   *    produced it; the same task counts its partition's docs ok/failed,
   *    bytes in and spans out, and the counts commit in the snapshot's
   *    manifest ([[metrics]] reads them back as a table).
+  *
+  * Exactly-once resume rests on two assumptions about the input:
+  *  - `doc_id` is unique. The anti-join keys on it: two rows sharing an
+  *    id that land in one run are both committed, and a row whose id was
+  *    committed by an earlier run is skipped as done.
+  *  - The input is append-only. A doc already committed is never
+  *    re-extracted, so an edit to its spans or media after its commit is
+  *    not seen, and a doc removed from the input stays in the table.
   */
 object Runner {
 

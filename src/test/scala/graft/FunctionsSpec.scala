@@ -203,7 +203,14 @@ class FunctionsSpec extends AnyFunSuite {
       (i.toLong, (0 until 64).map(_ => (rng.nextDouble() * 2 - 1).toFloat))
     }
     val df = rows.toDF("id", "v")
-    val oldSigs = Ann.signatureCols(col("v"), 8, 16, 64, 42L)
+    // the column form lsh_sigs replaced: bit b of table t is
+    // sign(v . hyperplane(t,b)), dot_f64 folded left
+    val oldSigs = (0 until 8).map { t =>
+      (0 until 16).map { b =>
+        val signs = typedlit((0 until 64).map(d => Ann.hyperSign(42L, t, b, d)))
+        when(graft.functions.dot_f64(col("v"), signs) >= 0, lit(1L << b)).otherwise(lit(0L))
+      }.reduce(_ + _)
+    }
     val oldDf = df.select(col("id") +: oldSigs.zipWithIndex.map {
       case (s, t) => s.as(s"s$t") }: _*).collect()
       .map(r => r.getLong(0) -> (1 to 8).map(r.getLong)).toMap

@@ -157,7 +157,7 @@ class MultimodalSpec extends AnyFunSuite {
     val b = PngWriterEx.write(PngWriterEx.Spec(40, 30, 10, colorType = 2))
     val c = BmpWriterEx.write(BmpWriterEx.Spec(24, 24, 11))
     val pairs = graft.operators.ImageOps.dupImages(spark,
-        mediaDF("a1" -> a1, "a2" -> a2, "b" -> b, "c" -> c))
+        mediaDF("a1" -> a1, "a2" -> a2, "b" -> b, "c" -> c), perceptual = false)
       .collect().map(r => (r.getString(0), r.getString(1), r.getInt(2)))
     assert(pairs.toSeq == Seq(("a1", "a2", 0)))
   }
@@ -193,8 +193,7 @@ class MultimodalSpec extends AnyFunSuite {
     val jpg = JpegWriterEx.encode(JpegWriterEx.Spec(w, h, 0, gray = true, quality = 90), plane)
     val other = PngWriterEx.write(PngWriterEx.Spec(50, 40, 77, colorType = 2))
     val pairs = graft.operators.ImageOps.dupImages(spark,
-        mediaDF("p" -> png, "j" -> jpg, "o" -> other),
-        maxHamming = 10, blocks = 8, perceptual = true)
+        mediaDF("p" -> png, "j" -> jpg, "o" -> other), perceptual = true)
       .collect().map(r => (r.getString(0), r.getString(1)))
     assert(pairs.toSeq == Seq(("j", "p")))
   }

@@ -87,15 +87,15 @@ class OperatorsSpec extends AnyFunSuite {
     val withDups = emb.select(col("vec_id"), col("embedding"))
       .unionAll(emb.filter(col("vec_id") < 30)
         .select((col("vec_id") + 100000).as("vec_id"), col("embedding")))
-    val gated = Dedup.embedCosineGated(withDups, 0.4)
+    val gated = Dedup.embedCosineGated(withDups)
       .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val exact = Dedup.embedCosineExact(withDups, 0.4)
+    val exact = Dedup.embedCosineExact(withDups)
       .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(gated.subsetOf(exact)) // gate never invents pairs
     val planted = (0L until 30L).map(i => (i, i + 100000)).toSet
     assert(planted.subsetOf(gated), "exact copies always share every bucket")
     // no crossJoin in the shipped plan
-    val plan = Dedup.embedCosineGated(withDups, 0.4)
+    val plan = Dedup.embedCosineGated(withDups)
       .queryExecution.executedPlan.toString
     assert(!plan.contains("CartesianProduct") && !plan.contains("BroadcastNestedLoop"),
       "gated dedup must not contain a cross join")
@@ -119,9 +119,9 @@ class OperatorsSpec extends AnyFunSuite {
     }
     val emb = rows.toDF("vec_id", "embedding")
     val queries = emb.filter(col("vec_id") < 16)
-    val brute = Ann.bruteTopK(emb, queries, k = 10).collect()
+    val brute = Ann.bruteTopK(emb, queries).collect()
       .map(r => (r.getLong(0), r.getLong(2))).toSet
-    val lsh = Ann.lshTopK(emb, queries, k = 10).collect()
+    val lsh = Ann.lshTopK(emb, queries).collect()
       .map(r => (r.getLong(0), r.getLong(2))).toSet
     val recall = (brute & lsh).size.toDouble / brute.size
     assert(recall >= 0.9, s"lsh recall@10 = $recall")
@@ -134,8 +134,10 @@ class OperatorsSpec extends AnyFunSuite {
     // 8-dim vectors: a hardcoded dims=64 would null-pad and degrade
     val emb = (0 until 32).map(i =>
       (i.toLong, Seq.fill(8)((i * 31 % 7 - 3).toFloat / 3f))).toDF("vec_id", "embedding")
-    val sigs = Ann.lshSignatures(emb, nTables = 2, nBits = 8).collect()
-    assert(sigs.length == 64) // 32 vectors x 2 tables
+    val dims = Ann.dimsOf(emb)
+    assert(dims == 8)
+    val sigs = Ann.lshSignatures(emb, dims).collect()
+    assert(sigs.length == 32 * Ann.NTables) // 32 vectors x NTables tables
     assert(sigs.forall(r => !r.isNullAt(2)))
   }
 
@@ -146,15 +148,15 @@ class OperatorsSpec extends AnyFunSuite {
     val emb = SparkEntry.embWithDups(spark, sf)
     val queries = spark.read.parquet(s"$sf/embeddings.parquet").filter(col("vec_id") < 16)
     val ops: Seq[(String, (DataFrame, DataFrame) => DataFrame)] = Seq(
-      "Dedup.minhashLsh" -> ((d, _) => Dedup.minhashLsh(d, 0.5)),
+      "Dedup.minhashLsh" -> ((d, _) => Dedup.minhashLsh(d)),
       "Dedup.simhash" -> ((d, _) => Dedup.simhash(d)),
-      "Dedup.ngramJaccard" -> ((d, _) => Dedup.ngramJaccard(d, 0.5)),
-      "Dedup.embedCosineGated" -> ((_, e) => Dedup.embedCosineGated(e, 0.4)),
-      "Ann.lshTopK" -> ((_, e) => Ann.lshTopK(e, queries, k = 10)),
+      "Dedup.ngramJaccard" -> ((d, _) => Dedup.ngramJaccard(d)),
+      "Dedup.embedCosineGated" -> ((_, e) => Dedup.embedCosineGated(e)),
+      "Ann.lshTopK" -> ((_, e) => Ann.lshTopK(e, queries)),
       "TextOps.fingerprint" -> ((d, _) => TextOps.fingerprint(d)),
-      "Curation.dupClusters" -> ((d, _) => Curation.dupClusters(Dedup.minhashLsh(d, 0.5))),
+      "Curation.dupClusters" -> ((d, _) => Curation.dupClusters(Dedup.minhashLsh(d))),
       "Curation.dupClustersFixpoint" ->
-        ((d, _) => Curation.dupClustersFixpoint(Dedup.minhashLsh(d, 0.5))))
+        ((d, _) => Curation.dupClustersFixpoint(Dedup.minhashLsh(d))))
     def rows(df: DataFrame): Seq[String] = df.collect().map(_.toString).toSeq.sorted
     for ((name, op) <- ops) {
       val one = rows(op(docs.coalesce(1), emb.coalesce(1)))
@@ -165,7 +167,7 @@ class OperatorsSpec extends AnyFunSuite {
   }
 
   test("minhashLsh computes the signatures once: the band self-join reuses its exchange") {
-    val df = graft.operators.Dedup.minhashLsh(SparkEntry.docsWithDups(spark, sf), 0.5)
+    val df = graft.operators.Dedup.minhashLsh(SparkEntry.docsWithDups(spark, sf))
     assert(df.collect().nonEmpty)
     // after execution the adaptive plan string holds the final plan
     val plan = df.queryExecution.executedPlan.toString
@@ -303,10 +305,10 @@ class OperatorsSpec extends AnyFunSuite {
   test("the dedup cluster queries share the persisted minhash pairs") {
     SparkEntry.queries("dedup_minhash_lsh")(spark, sf).count()
     val docs = SparkEntry.docsWithDups(spark, sf)
-    val shared = cacheEntries(graft.operators.Dedup.minhashLsh(docs, 0.5))
+    val shared = cacheEntries(graft.operators.Dedup.minhashLsh(docs))
     assert(shared.size == 1)
     // the pairs input dedup_clusters and dedup_clusters_fix pass to Curation
-    val read = cacheEntries(graft.operators.Dedup.minhashLshCached(docs, 0.5))
+    val read = cacheEntries(graft.operators.Dedup.minhashLshCached(docs))
     assert(read.nonEmpty && read.forall(_ eq shared.head))
     for (q <- Seq("dedup_clusters", "dedup_clusters_fix"))
       assert(SparkEntry.queries(q)(spark, sf).count() > 0, q)

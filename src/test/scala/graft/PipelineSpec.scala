@@ -418,6 +418,45 @@ class PipelineSpec extends AnyFunSuite {
       "Software"))
   }
 
+  test("corpus generation and extraction do not depend on the JVM default locale") {
+    import graft.kernel.Extract
+    val opt = Extract.Options(-1)
+    // Gen.build + Extract + assembleDoc per doc, as Pipeline.extract
+    // composes them, without Spark
+    def run(locale: java.util.Locale) = {
+      val default = java.util.Locale.getDefault
+      try {
+        java.util.Locale.setDefault(locale)
+        (0L until 300L).map { i =>
+          val b = Gen.build(Gen.Seed, i)
+          val media = b.media.map(m => m.media_ref -> m.bytes_b64).toMap
+          val parts = b.spans.map { s =>
+            val (ref, out, bytesIn) =
+              if (s.media_ref == null)
+                (null, Extract.extractText(s.kind, s.text, opt),
+                  if (s.text == null) 0L else s.text.length.toLong)
+              else {
+                val bytes = media.get(s.media_ref)
+                  .map(java.util.Base64.getDecoder.decode(_)).orNull
+                (s.media_ref, Extract.extractBytes("media", bytes, opt),
+                  if (bytes == null) 0L else bytes.length.toLong)
+              }
+            SpanExtract(b.doc_id, s.offset,
+              if (out.isMedia) "media" else if (out.blocks.nonEmpty) "text" else "none",
+              out.blocks, ref, out.contentType,
+              out.metadata.toSeq.map { case (k, v) => MetaEntry(k, v) },
+              out.issue.getOrElse(""), bytesIn)
+          }
+          Pipeline.assembleDoc(b.doc_id, parts.toArray)
+        }
+      } finally java.util.Locale.setDefault(default)
+    }
+    val root = run(java.util.Locale.ROOT)
+    val tr = run(new java.util.Locale("tr", "TR"))
+    assert(root.map(_.doc_id).distinct.size == 300)
+    root.zip(tr).foreach { case (r, t) => assert(t == r, r.doc_id) }
+  }
+
   test("table reads are planned from manifests: building them submits no Spark job") {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val outDir = freshOut()
