@@ -38,7 +38,7 @@ object Gen {
 
   def build(seed: Long, i: Long): Built = {
     val rng = new SplittableRandom(mix(seed, i))
-    val docId = f"doc-$i%09d"
+    val docId = "doc-%09d".formatLocal(Locale.ROOT, i)
     val roll = rng.nextInt(100)
     val lang = pickLang(rng)
 
@@ -489,9 +489,7 @@ object Gen {
           dpi = if (rng.nextInt(4) == 0) Vector(72, 96, 150, 300)(rng.nextInt(4)) else 0,
           modified =
             if (rng.nextInt(5) == 0)
-              f"20${10 + rng.nextInt(15)}%02d-${1 + rng.nextInt(12)}%02d-" +
-                f"${1 + rng.nextInt(28)}%02d ${rng.nextInt(24)}%02d:" +
-                f"${rng.nextInt(60)}%02d:${rng.nextInt(60)}%02d"
+              timestamp(rng, '-')
             else "")
     val bytes = PngWriterEx.write(spec)
     val ref = s"m-$docId-$k"
@@ -531,9 +529,7 @@ object Gen {
       orientation = if (rng.nextInt(3) == 0) Vector(1, 3, 6, 8)(rng.nextInt(4)) else 0,
       dateTime =
         if (rng.nextBoolean())
-          f"20${10 + rng.nextInt(15)}%02d:${1 + rng.nextInt(12)}%02d:" +
-            f"${1 + rng.nextInt(28)}%02d ${rng.nextInt(24)}%02d:" +
-            f"${rng.nextInt(60)}%02d:${rng.nextInt(60)}%02d"
+          timestamp(rng, ':')
         else "",
       gps =
         if (rng.nextInt(4) == 0)
@@ -1062,6 +1058,14 @@ object Gen {
 
   private def b64(bytes: Array[Byte]): String =
     java.util.Base64.getEncoder.encodeToString(bytes)
+
+  /** A random 2010-2024 "YYYY?MM?DD hh:mm:ss", `sep` between the date
+    * fields, in ASCII digits whatever the default locale.
+    */
+  private def timestamp(rng: SplittableRandom, sep: Char): String =
+    "20%02d%c%02d%c%02d %02d:%02d:%02d".formatLocal(Locale.ROOT,
+      10 + rng.nextInt(15), sep, 1 + rng.nextInt(12), sep, 1 + rng.nextInt(28),
+      rng.nextInt(24), rng.nextInt(60), rng.nextInt(60))
 
   // ------------------------------------------------------------- writing
 

@@ -305,9 +305,10 @@ object JpegWriterEx {
     35, 42, 49, 56, 57, 50, 43, 36, 29, 22, 15, 23, 30, 37, 44, 51,
     58, 59, 52, 45, 38, 31, 39, 46, 53, 60, 61, 54, 47, 55, 62, 63)
 
+  // StrictMath, so every JVM builds the same table
   private val Cos: Array[Array[Double]] = Array.tabulate(8, 8) { (u, x) =>
     val c = if (u == 0) 1.0 / math.sqrt(2.0) else 1.0
-    c * math.cos((2 * x + 1) * u * math.Pi / 16.0)
+    c * StrictMath.cos((2 * x + 1) * u * math.Pi / 16.0)
   }
 
   /** Forward DCT + quantize one 8x8 block (edge-replicated padding) into

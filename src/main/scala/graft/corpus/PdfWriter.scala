@@ -2,6 +2,7 @@ package graft.corpus
 
 import java.io.ByteArrayOutputStream
 import java.nio.charset.StandardCharsets
+import java.util.Locale
 import java.util.zip.Deflater
 
 /** Deterministic PDF writer for the synthetic corpus: produces real,
@@ -236,7 +237,7 @@ object PdfWriter {
       entries.grouped(100).foreach { g =>
         sb.append(s"${g.size} beginbfrange\n")
         g.foreach { case (c, code) =>
-          sb.append(f"<$code%02x><$code%02x><${c.toInt}%04x>%n")
+          sb.append(f"<$code%02x><$code%02x><${c.toInt}%04x>\n")
         }
         sb.append("endbfrange\n")
       }
@@ -680,7 +681,7 @@ object PdfWriter {
     } else {
       val xref = new StringBuilder
       xref.append(s"xref\n0 ${offsets.length + 1}\n0000000000 65535 f \n")
-      offsets.foreach(o => xref.append(f"$o%010d 00000 n %n"))
+      offsets.foreach(o => xref.append("%010d 00000 n \n".formatLocal(Locale.ROOT, o)))
       xref.append(s"trailer\n<< /Size ${offsets.length + 1} /Root 2 0 R /Info 1 0 R" +
         s"$encTrailer$idTrailer >>\n")
       xref.append(s"startxref\n$xrefPos\n%%EOF\n")

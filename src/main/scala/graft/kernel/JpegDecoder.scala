@@ -199,7 +199,8 @@ object JpegDecoder {
     35, 42, 49, 56, 57, 50, 43, 36, 29, 22, 15, 23, 30, 37, 44, 51,
     58, 59, 52, 45, 38, 31, 39, 46, 53, 60, 61, 54, 47, 55, 62, 63)
 
-  // cosTable, flat: CosF(u*8+x) = cos((2x+1) u pi / 16) * C(u), C(0)=1/sqrt(2)
+  // cosTable, flat: CosF(u*8+x) = cos((2x+1) u pi / 16) * C(u), C(0)=1/sqrt(2);
+  // StrictMath, so every JVM builds the same table
   private val CosF: Array[Double] = {
     val a = new Array[Double](64)
     var u = 0
@@ -207,7 +208,7 @@ object JpegDecoder {
       val c = if (u == 0) 1.0 / math.sqrt(2.0) else 1.0
       var x = 0
       while (x < 8) {
-        a(u * 8 + x) = c * math.cos((2 * x + 1) * u * math.Pi / 16.0)
+        a(u * 8 + x) = c * StrictMath.cos((2 * x + 1) * u * math.Pi / 16.0)
         x += 1
       }
       u += 1

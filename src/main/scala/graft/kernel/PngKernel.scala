@@ -68,9 +68,9 @@ object PngKernel {
             }
           case "tIME" if len >= 7 =>
             val yr = ((bytes(p + 8) & 0xff) << 8) | (bytes(p + 9) & 0xff)
-            val ts = f"$yr%04d-${bytes(p + 10) & 0xff}%02d-" +
-              f"${bytes(p + 11) & 0xff}%02d ${bytes(p + 12) & 0xff}%02d:" +
-              f"${bytes(p + 13) & 0xff}%02d:${bytes(p + 14) & 0xff}%02d"
+            val ts = "%04d-%02d-%02d %02d:%02d:%02d".formatLocal(Locale.ROOT, yr,
+              bytes(p + 10) & 0xff, bytes(p + 11) & 0xff, bytes(p + 12) & 0xff,
+              bytes(p + 13) & 0xff, bytes(p + 14) & 0xff)
             meta += ("Last Modified" -> ts)
           case "IEND" => p = bytes.length - 12 // stop
           case _      => ()

@@ -81,9 +81,10 @@ object ImageOps {
     hash
   }
 
-  // DCT basis for the 32-point transform pHash uses
+  // DCT basis for the 32-point transform pHash uses (StrictMath, so every
+  // JVM builds the same table)
   private val Cos32: Array[Array[Double]] = Array.tabulate(32, 32) { (u, x) =>
-    math.cos((2 * x + 1) * u * math.Pi / 64.0)
+    StrictMath.cos((2 * x + 1) * u * math.Pi / 64.0)
   }
 
   /** 64-bit DCT perceptual hash: resize luma to 32x32 (box filter), 2-D

@@ -22,36 +22,25 @@ import graft.kernel.{Extract, Lang}
   *    cost across cores. A doc's inline spans stay in its scan split, so a
   *    doc with many heavy inline spans is one task's work; giant binary
   *    payloads are media rows, one kernel call each in the media scan;
+  *  - a resume runs the plan of a fresh run over its todo set, so every
+  *    media row is extracted, including those only committed docs
+  *    reference; their extracts drop out at the span join. Pruning them
+  *    before the decode is left to Spark's runtime bloom filter, which
+  *    needs a media side it can trace to the scan;
   *  - kernels run inside mapPartitions: parser state (lang profiles,
   *    format tables) is JVM-static, amortized per executor, mirroring the
   *    reference's one-JVM claim (reference: README.md:225-228).
   */
 object Pipeline {
 
-  /** Broadcast cap of the media gate's referenced-key set, in estimated
-    * keys: the key plan's size-only statistic at ~48 B per key. That
-    * statistic is scaled from the docs INPUT's file size, not from the
-    * todo set (a left_anti join's size estimate is its left side's), so a
-    * resume over a large input is above the cap too. Above the cap the
-    * gate is dropped, not turned into a shuffled semi-join, which would
-    * move the media side (payload bytes) through an exchange.
-    */
-  private val GateBroadcastMaxKeys = 4L * 1000 * 1000
-
   /** Full pipeline. `docs(doc_id, spans)`, `media(media_ref, bytes_b64)`.
     *
-    * `maxContentLength` truncates extracted text (-1 = unbounded).
-    * `gateMedia` extracts only media rows a doc span references: a
-    * keys-only semi-join against a broadcast of the referenced keys gates
-    * the media scan, so a resume runs kernels only on the missing docs'
-    * media. It is off for fresh runs, where every media row is referenced
-    * and the key set would cost an extra docs scan and a broadcast barrier
-    * before the media scan. Output rows are identical either way: the
-    * span join is a LEFT join keyed by span-side refs, so unreferenced
-    * extracts drop out.
+    * `maxContentLength` truncates extracted text (-1 = unbounded). Every
+    * media row is extracted, referenced or not; the span join is a LEFT
+    * join keyed by span-side refs, so unreferenced extracts drop out.
     */
   def extract(spark: SparkSession, docs: DataFrame, media: DataFrame,
-      maxContentLength: Int = -1, gateMedia: Boolean = false): Dataset[ExtractedRow] = {
+      maxContentLength: Int = -1): Dataset[ExtractedRow] = {
     import spark.implicits._
 
     // branch-specialized projections. The media branch never touches the
@@ -104,32 +93,11 @@ object Pipeline {
     // cost is invisible at 2 cores and ~20% of the pass at 8), and
     // deduplicates kernel work when several spans reference one media row.
     // Detection is content-first (D1 re-sniffs), so extraction needs
-    // nothing from the span row. Unreferenced media (the resume case) is
-    // gated out by a broadcast semi-join on keys BEFORE payloads are
-    // decoded when `gateMedia` is on.
-    // the span join repartitions media spans on media_ref. The gate's key
-    // set below is derived from this subtree, but the two exchanges are
-    // NOT reused: ColumnPruning pushes the keys' select(media_ref) below
-    // the repartition, so the gate's Exchange hashpartitioning(media_ref)
-    // carries one column and reads its own docs scan+explode on a resume
+    // nothing from the span row.
     val mediaSpansParted = spanRows(withText = false)
       .filter(col("media_ref").isNotNull)
       .repartition(p, col("media_ref"))
-    // The gate's key set is broadcast only while its estimate is under
-    // GateBroadcastMaxKeys (see there: the estimate is the docs input's,
-    // so a resume over a large input drops the gate too). Without the
-    // gate every media row is extracted; results are the same.
-    val gatedMedia =
-      if (gateMedia) {
-        val keys = mediaSpansParted.select(col("media_ref")).distinct()
-        val stats = keys.queryExecution.optimizedPlan.stats
-        val estKeys = stats.rowCount.map(_.longValue)
-          .getOrElse(stats.sizeInBytes.longValue / 48L) // ~48 B per md5-ish id row
-        if (estKeys <= GateBroadcastMaxKeys)
-          media.join(broadcast(keys), Seq("media_ref"), "left_semi")
-        else media
-      } else media
-    val extractedMedia: Dataset[MediaExtract] = gatedMedia
+    val extractedMedia: Dataset[MediaExtract] = media
       .select(col("media_ref"), unbase64(col("bytes_b64")).as("bytes"))
       .as[(String, Array[Byte])]
       .mapPartitions(_.map { case (ref, bytes) =>

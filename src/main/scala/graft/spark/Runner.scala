@@ -46,11 +46,8 @@ object Runner {
       .map(_.select("doc_id").distinct())
     val todo = done.fold(docs)(d => docs.join(d, Seq("doc_id"), "left_anti"))
 
-    // resume runs gate the media scan by the todo set's referenced keys
-    // (the gate's purpose); fresh runs skip the gate's extra docs scan —
-    // output rows are identical either way (see Pipeline.extract)
     val counted = spark.sparkContext.collectionAccumulator[PartCounts](s"parts of $runId")
-    val extracted = Pipeline.extract(spark, todo, media, gateMedia = done.isDefined)
+    val extracted = Pipeline.extract(spark, todo, media)
       .mapPartitions(countInto(counted))
       .toDF()
       .withColumn("part_id", spark_partition_id())

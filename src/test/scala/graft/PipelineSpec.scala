@@ -38,11 +38,6 @@ class PipelineSpec extends AnyFunSuite {
     finally saved.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
   }
 
-  /** Scales every file-source size estimate: a 400-doc corpus then looks
-    * far above the media gate's broadcast cap to the planner.
-    */
-  val HugeInput = "spark.sql.sources.fileCompressionFactor" -> "1000000"
-
   def goldenMismatches(df: org.apache.spark.sql.DataFrame): Long =
     spanFingerprints(df).as("a")
       .join(spanFingerprints(Gen.readGolden(spark, corpusDir)).as("b"), Seq("doc_id"), "full_outer")
@@ -87,32 +82,6 @@ class PipelineSpec extends AnyFunSuite {
     }
     val (a, b) = (fingerprints(2), fingerprints(16))
     assert(a.size == 400 && a == b)
-  }
-
-  test("media gate: broadcast semi-join under the key cap, dropped above it") {
-    val docs = Gen.readDocs(spark, corpusDir)
-    val media = Gen.readMedia(spark, corpusDir)
-    // the gate defaults OFF for fresh runs (Runner turns it on for a
-    // resume); gate-shape assertions opt in explicitly
-    val below = Pipeline.extract(spark, docs, media, gateMedia = true).toDF()
-    val planBelow = below.queryExecution.executedPlan.toString
-    assert(planBelow.contains("LeftSemi"), "gate must semi-join under the cap")
-    assert(planBelow.contains("Broadcast"), "the key set must be broadcast, never shuffled")
-    // an input that looks huge to the planner (the ~1e9-key full-scale
-    // regime): the gate drops out entirely (no payload-shuffling
-    // semi-join may appear in its place)
-    val above = withConf(HugeInput) {
-      Pipeline.extract(spark, docs, media, gateMedia = true).toDF()
-    }
-    val planAbove = above.queryExecution.executedPlan.toString
-    assert(!planAbove.contains("LeftSemi"),
-      "above the cap the gate is dropped; a shuffled semi-join would move payloads")
-    // and the results are identical either way (left join drops extras)
-    val diff = spanFingerprints(below).as("a")
-      .join(spanFingerprints(above).as("b"), Seq("doc_id"), "full_outer")
-      .filter(col("a.fp").isNull || col("b.fp").isNull || col("a.fp") =!= col("b.fp"))
-      .count()
-    assert(diff == 0)
   }
 
   test("doc-level envelope: content types, language, sorted metadata") {
@@ -236,31 +205,6 @@ class PipelineSpec extends AnyFunSuite {
     }
   }
 
-  test("resume semi-join gate: phase 2 extracts ONLY the missing docs' media") {
-    val outDir = freshOut()
-    val docs = Gen.readDocs(spark, corpusDir)
-    val media = Gen.readMedia(spark, corpusDir)
-    val half = docs.filter(abs(hash(col("doc_id"))) % 2 === 0)
-    Runner.run(spark, half, media, outDir, "run-1")
-
-    // media referenced by the docs NOT yet committed = what phase 2 may extract
-    val rest = docs.join(half.select("doc_id"), Seq("doc_id"), "left_anti")
-    val expected = rest
-      .select(explode(col("spans.media_ref")).as("r")).filter(col("r").isNotNull)
-      .select("r").distinct().count()
-    val totalMedia = media.count()
-    assert(expected < totalMedia, "test needs a proper split")
-
-    graft.kernel.Extract.mediaCalls.set(0L)
-    Runner.run(spark, docs, media, outDir, "run-2")
-    val calls = graft.kernel.Extract.mediaCalls.get()
-    assert(calls == expected,
-      s"gate leak: $calls kernel invocations for $expected referenced media ($totalMedia total)")
-
-    // span equality unchanged: the combined table matches the goldens
-    assert(goldenMismatches(IcebergLite.readAll(spark, Runner.extractedDir(outDir)).get) == 0)
-  }
-
   test("missing media_ref -> io_error row (8 and 4 shuffle partitions)") {
     import spark.implicits._
     val docs = Seq(
@@ -338,7 +282,7 @@ class PipelineSpec extends AnyFunSuite {
     assert(out.filter(col("status") === "ok").count() > 300)
   }
 
-  test("resume above the gate's cap: the gate is dropped, every doc committed once") {
+  test("resume: no semi-join, each media row extracted once, every doc committed once") {
     import org.apache.spark.sql.execution.QueryExecution
     import org.apache.spark.sql.util.QueryExecutionListener
     val outDir = freshOut()
@@ -356,21 +300,21 @@ class PipelineSpec extends AnyFunSuite {
     spark.listenerManager.register(listener)
     graft.kernel.Extract.mediaCalls.set(0L)
     try {
-      withConf(HugeInput)(Runner.run(spark, docs, media, outDir, "run-2"))
+      Runner.run(spark, docs, media, outDir, "run-2")
       // the listener is called on the listener bus: wait for the resume's write
       val deadline = System.nanoTime() + 30L * 1000000000L
       while (resumePlans.isEmpty && System.nanoTime() < deadline) Thread.sleep(10)
     } finally spark.listenerManager.unregister(listener)
     assert(resumePlans.nonEmpty, "the resume's plan was not seen")
-    assert(!resumePlans.exists(_.contains("LeftSemi")), "the gate must be dropped above its cap")
-    // without the gate, each media row is extracted exactly once
+    assert(!resumePlans.exists(_.contains("LeftSemi")), "the resume must not semi-join media")
+    // a resume runs the plan of a fresh run: each media row is extracted once
     assert(graft.kernel.Extract.mediaCalls.get() == media.count())
     val all = IcebergLite.readAll(spark, Runner.extractedDir(outDir)).get
     assert(all.count() == 400 && all.select("doc_id").distinct().count() == 400)
     assert(goldenMismatches(all) == 0)
   }
 
-  test("payload bytes cross no exchange, with the media gate off and on") {
+  test("payload bytes cross no exchange, and none is a broadcast") {
     import org.apache.spark.sql.catalyst.expressions.ExprId
     import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
     import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, Exchange}
@@ -392,18 +336,16 @@ class PipelineSpec extends AnyFunSuite {
     }
     val docs = Gen.readDocs(spark, corpusDir)
     val media = Gen.readMedia(spark, corpusDir)
-    for (gate <- Seq(false, true)) {
-      // without AQE the executed plan is the whole plan, every exchange in it
-      val plan = withConf("spark.sql.adaptive.enabled" -> "false") {
-        Pipeline.extract(spark, docs, media, gateMedia = gate).queryExecution.executedPlan
-      }
-      val exchanges = plan.collect { case e: Exchange => e }
-      assert(exchanges.nonEmpty)
-      assert(exchanges.exists(_.isInstanceOf[BroadcastExchangeExec]) == gate, plan.toString)
-      val payload = exchanges.filter(e => e.output.exists(a => !buffers(e)(a.exprId) &&
-        (a.name == "bytes_b64" || binary(a.dataType))))
-      assert(payload.isEmpty, s"gate=$gate: payload bytes in ${payload.mkString("\n")}")
+    // without AQE the executed plan is the whole plan, every exchange in it
+    val plan = withConf("spark.sql.adaptive.enabled" -> "false") {
+      Pipeline.extract(spark, docs, media).queryExecution.executedPlan
     }
+    val exchanges = plan.collect { case e: Exchange => e }
+    assert(exchanges.nonEmpty)
+    assert(!exchanges.exists(_.isInstanceOf[BroadcastExchangeExec]), plan.toString)
+    val payload = exchanges.filter(e => e.output.exists(a => !buffers(e)(a.exprId) &&
+      (a.name == "bytes_b64" || binary(a.dataType))))
+    assert(payload.isEmpty, s"payload bytes in ${payload.mkString("\n")}")
   }
 
   test("metadata key order does not depend on the JVM default locale") {
@@ -452,9 +394,11 @@ class PipelineSpec extends AnyFunSuite {
       } finally java.util.Locale.setDefault(default)
     }
     val root = run(java.util.Locale.ROOT)
-    val tr = run(new java.util.Locale("tr", "TR"))
     assert(root.map(_.doc_id).distinct.size == 300)
-    root.zip(tr).foreach { case (r, t) => assert(t == r, r.doc_id) }
+    // Turkish case mapping, and Thai digits in every %d format
+    for (locale <- Seq(new java.util.Locale("tr", "TR"),
+        java.util.Locale.forLanguageTag("th-TH-u-nu-thai")))
+      root.zip(run(locale)).foreach { case (r, t) => assert(t == r, s"$locale ${r.doc_id}") }
   }
 
   test("table reads are planned from manifests: building them submits no Spark job") {
